@@ -7,14 +7,16 @@ order + `ORDER BY height ASC, id ASC` replay
 (`parser/dex/repo/repository.go:117`). Under Spark's unordered shuffle the
 order must be made explicit: ``(warc_ts DESC, seq DESC)`` per ``url``.
 
-Two physical strategies, both provided:
+Two physical strategies:
 
 - :func:`latest_wins_agg` — ``groupBy(key).agg(max_by(row, order))``.
-  **Default.** A hash aggregate with *map-side partial aggregation*: each
-  map task pre-collapses every key (hot ones included) to one candidate row
-  before the shuffle, so a url with 10^6 updates ships ~num_map_tasks rows,
-  not 10^6. This is the scale-correct plan — skew is neutralized before the
-  exchange, and no per-partition sort is needed.
+  The one the CDC pipeline uses for its batch dedup, audit oracle and
+  merge-on-read resolution. A hash aggregate with *map-side partial
+  aggregation*: each map task pre-collapses every key (hot ones included)
+  to one candidate row before the shuffle, so a url with 10^6 updates
+  ships ~num_map_tasks rows, not 10^6. This is the scale-correct plan —
+  skew is neutralized before the exchange, and no per-partition sort is
+  needed.
 
 - :func:`latest_wins_window` — the literal ``row_number() over (partition by
   url order by warc_ts desc, seq desc) = 1`` named by the north rule, with
@@ -22,9 +24,11 @@ Two physical strategies, both provided:
   ``(url, salt)`` sub-partitions (splits a hot url across ``salt_buckets``
   reducers), phase 2 dedups the ≤``salt_buckets``-row residue per url.
   Windows don't get map-side combine, so the salted form is the correct
-  window-shaped plan under hot-domain skew.
+  window-shaped plan under hot-domain skew. Exported by the operator
+  library; no pipeline path uses it.
 
-Both are order-insensitive in the input and agree exactly (tested).
+Both are order-insensitive in the input and agree exactly (tested in
+tests/test_replay.py::test_latest_wins_window_matches_agg).
 """
 
 from __future__ import annotations

@@ -32,7 +32,7 @@ import json
 import os
 import time
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -43,7 +43,7 @@ from cosmwasm_etl_spark.functions.extraction import (
 )
 from cosmwasm_etl_spark.lakehouse import LakeTable
 from cosmwasm_etl_spark.lakehouse.schema import _parse_type as _parse_lake_type
-from cosmwasm_etl_spark.operators.dedup_window import latest_wins_agg, latest_wins_window
+from cosmwasm_etl_spark.operators.dedup_window import latest_wins_agg
 from cosmwasm_etl_spark.operators.validation import full_outer_diff
 
 PAGES_SCHEMA = T.StructType(
@@ -94,30 +94,6 @@ def _is_ok_fast_expr():
     )
 
 
-def _jvm_extract_expr() -> Column:
-    """Pure-JVM extraction (the ``extractor="jvm"`` scaling-control path):
-    strip script/style/comments/tags with one regexp pass, fold whitespace.
-    Cost-representative of the Arrow extractor, zero Python. The decode is
-    structurally guarded by when(is_valid_utf8) — not a boolean conjunction
-    whose evaluation order Catalyst may rewrite — so invalid bytes yield
-    NULL text instead of failing the job (round-4 ADVICE #1). Shared by
-    apply_batch and expected_state so apply and audit oracle cannot drift."""
-    return F.trim(
-        F.regexp_replace(
-            F.regexp_replace(
-                F.when(
-                    F.is_valid_utf8(F.col("html")),
-                    F.decode(F.col("html"), "UTF-8"),
-                ),
-                r"(?s)<(script|style)\b[^>]*>.*?</\1\s*>|<!--.*?-->|<[^>]*>",
-                " ",
-            ),
-            r"\s+",
-            " ",
-        )
-    )
-
-
 def create_pages_table(spark: SparkSession, path: str, num_buckets: int = 16) -> LakeTable:
     return LakeTable.create(spark, path, PAGES_SCHEMA, key_col="url", ts_col="warc_ts", num_buckets=num_buckets)
 
@@ -128,13 +104,10 @@ class CdcPipeline:
         spark: SparkSession,
         table: LakeTable,
         work_dir: str,
-        dedup_strategy: str = "agg",
-        salt_buckets: int | None = 16,
         sink_mode: str | None = None,
         compact_every: int = 8,
         extract_versions: list[tuple[int, int]] | None = None,
         quarantine_mode: str = "batch",
-        extractor: str = "arrow",
         post_commit=None,
         winner_mode: str = "full",
         canonicalize_keys: bool = False,
@@ -157,8 +130,6 @@ class CdcPipeline:
         self.lineage_dir = os.path.join(self.work_dir, "lineage")
         os.makedirs(self.quarantine_dir, exist_ok=True)
         os.makedirs(self.lineage_dir, exist_ok=True)
-        self.dedup_strategy = dedup_strategy
-        self.salt_buckets = salt_buckets
         # sink_mode=None adopts the TABLE's recorded mode (the commit log
         # remembers whether deltas were ever written) — a second session
         # opening an ingest table gets correct reads without out-of-band
@@ -190,39 +161,11 @@ class CdcPipeline:
         # (`parser/dex/dex.go:93-100`), so capture lag is semantically safe:
         # raw events remain in the immutable log either way.
         self.quarantine_mode = quarantine_mode
-        # "arrow" (default): the byte-identical pandas-UDF extraction — the
-        # CORRECTNESS path. "jvm": a cost-representative pure-JVM extraction
-        # (regexp_replace chain) used ONLY as the scaling CONTROL in
-        # bench.py — same scans/shuffles/writes with zero Python, so the
-        # measured efficiency delta isolates the Python/Arrow layer's
-        # scaling contribution. Never use "jvm" for real ingestion: its
-        # output is not byte-identical to the reference.
-        if extractor not in ("arrow", "jvm"):
-            raise ValueError(f"unknown extractor: {extractor}")
-        self.extractor = extractor
-        # "full" (default): single-phase dedup — ONE scan of the batch, one
-        # hash-aggregate exchange of whole rows. Hot-key safe: max_by's
-        # map-side partial aggregation collapses every key to one candidate
-        # row per map task BEFORE the exchange, so a url with 10^6 updates
-        # ships <= n_map_tasks rows, never 10^6. "keys": two-phase — winner
-        # selection on ~24 B/event key columns, payloads re-fetched by a
-        # bounded broadcast seq-join; the exchange is 333x narrower but the
-        # batch is SCANNED TWICE and the broadcast build is an extra job.
-        # The round-3 interleaved same-window A/B measured full at 2.15x
-        # keys' steady throughput on 8 KB pages (38.9k vs 18.1k ev/s,
-        # BENCH.md) — the exchange that "keys" saves is already collapsed
-        # by partial aggregation, while its second scan is real extra I/O.
-        # Keep "keys" for clusters where shuffle bytes are the binding
-        # constraint (e.g. payload >> page-cache, remote shuffle service).
-        # "bucket": fused single-exchange variant — repartition once on the
-        # table's bucket function, dedup per (bucket, url) with no further
-        # exchange (the bucket partitioning already clusters urls), output
-        # lands pre-placed for the sink. Trades map-side combine (none —
-        # the exchange precedes the agg) for one less full shuffle stage;
-        # prefer "full" when per-map-task key duplication is high.
-        if winner_mode not in ("keys", "full", "bucket"):
-            raise ValueError(f"unknown winner_mode: {winner_mode}")
-        self.winner_mode = winner_mode
+        # The apply has one winner plan: a single-phase latest-wins
+        # aggregate, then a bucket-placement exchange (see apply_batch).
+        # The keyword survives only for callers that still pass "full".
+        if winner_mode != "full":
+            raise ValueError(f"unknown winner_mode: {winner_mode} (only 'full' is supported)")
         # T6 downstream-task barrier (the aggregator scheduler-DAG analog,
         # `aggregator/aggregator.go:69-84`): called AFTER each batch's
         # atomic commit as post_commit(events_df, batch_id, stats). The
@@ -267,37 +210,6 @@ class CdcPipeline:
 
     # ------------------------------------------------------------ single batch
 
-    def _dedup(self, df: DataFrame) -> DataFrame:
-        if self.dedup_strategy == "agg":
-            return latest_wins_agg(df, key="url", order_cols=["warc_ts", "seq"])
-        return latest_wins_window(
-            df, key="url", order_cols=["warc_ts", "seq"], salt_buckets=self.salt_buckets
-        )
-
-    def _winner_seqs(self, valid: DataFrame) -> DataFrame:
-        """Latest-wins winner selection on the KEY COLUMNS ONLY.
-
-        The W5 dedup itself needs just (url, warc_ts, seq) — three narrow
-        columns — so the aggregate's exchange moves ~24 B/event instead of
-        the full 8 KB html payload (333× less shuffle traffic; the payload is
-        fetched afterwards by a broadcast seq-join). ``seq`` is globally
-        unique, so the surviving seq set identifies winner rows exactly."""
-        keys = valid.select("url", "warc_ts", "seq")
-        return self._dedup(keys).select("seq")
-
-    def _fetch_winners(self, events: DataFrame, winner_seqs: DataFrame) -> DataFrame:
-        """Join the full-width events back to the winner seq set
-        (winner_mode="keys" only — always per-micro-batch).
-
-        The seq set is one long column bounded by the micro-batch's distinct
-        key count (itself bounded by backpressure/epochs_per_batch), so the
-        forced broadcast is safe by construction; the events side is NEVER
-        shuffled — its 8 KB payloads stay in their scan partitions until the
-        single bucket repartition before the sink write. (The full-log audit
-        does NOT come through here: its winner set is corpus-sized, so
-        expected_state uses the single-phase dedup instead.)"""
-        return events.join(F.broadcast(winner_seqs), "seq")
-
     def apply_batch(self, events: DataFrame, batch_id: int) -> dict:
         """Apply one micro-batch of change events. Idempotent on batch_id.
 
@@ -338,26 +250,13 @@ class CdcPipeline:
         masked = F.when(~is_ok_fast, F.col("html"))  # NULL for fast rows
 
         obs = Observation(f"cdc-batch-{batch_id}")
-        if self.extractor == "jvm":
-            # control path: JVM-only validity (is_valid_utf8 — a strict
-            # superset of the python ratio rule on the fixtures). The
-            # dead-letter label distinguishes the two ways the fast check
-            # fires — truly invalid bytes vs a valid page containing a
-            # literal U+FFFD (r5 ADVICE #2); the capture SET is unchanged.
-            q_err = F.when(
-                ~is_ok_fast,
-                F.when(
-                    F.is_valid_utf8(F.col("html")), F.lit("replacement_char_literal")
-                ).otherwise(F.lit("invalid_encoding")),
-            )
-        else:
-            # r6 A/B note: a residue-branch form (python arbiter on a
-            # second events.filter(~is_ok_fast) scan, joined back as a
-            # broadcast bad-list) was measured SLOWER (3.3 s vs 2.6 s per
-            # 250k-event plan): the duplicated utf8-validity scan over the
-            # full batch costs more than this masked column's mostly-NULL
-            # Arrow channel. The masked single-scan form stands.
-            q_err = check_quarantine_udf()(masked)
+        # r6 A/B note: a residue-branch form (python arbiter on a second
+        # events.filter(~is_ok_fast) scan, joined back as a broadcast
+        # bad-list) was measured SLOWER (3.3 s vs 2.6 s per 250k-event
+        # plan): the duplicated utf8-validity scan over the full batch costs
+        # more than this masked column's mostly-NULL Arrow channel. The
+        # masked single-scan form stands.
+        q_err = check_quarantine_udf()(masked)
         ev = events.withColumn("__q_err", q_err).observe(
             obs,
             F.count(F.lit(1)).alias("n"),
@@ -367,48 +266,18 @@ class CdcPipeline:
         )
         valid = ev.filter(F.col("__q_err").isNull()).drop("__q_err")
         n_buckets = self.table.state().num_buckets
-        # Winner selection + bucket placement (see winner_mode in __init__):
-        # - "bucket": FUSED — one repartition on the table's bucket
-        #   function, then a per-(bucket, url) max_by agg. The repartition's
-        #   HashPartitioning(__b) already satisfies the aggregate's
-        #   ClusteredDistribution(__b, url) (same url ⇒ same bucket ⇒ same
-        #   partition), so the agg adds NO second exchange and its output is
-        #   already bucket-placed for the sink: the whole apply path has
-        #   exactly ONE exchange.
-        # - "full": dedup exchange on url (map-side combined), then a
-        #   second exchange placing winners by bucket.
-        # - "keys": key-only dedup + broadcast payload re-fetch, then the
-        #   bucket exchange.
-        # Extraction always runs AFTER placement, so shuffled bytes are raw
-        # html, never html+text.
-        if self.winner_mode == "bucket":
-            bexpr = self.table._bucket_expr("url", n_buckets)
-            cols = valid.columns
-            row = F.struct(*[F.col(c) for c in cols])
-            order = F.struct(F.col("warc_ts"), F.col("seq"))
-            placed = (
-                valid.withColumn("__b", bexpr)
-                .repartition(max(n_buckets, 1), F.col("__b"))
-                .groupBy("__b", "url")
-                .agg(F.max_by(row, order).alias("__r"))
-                .select(*[F.col(f"__r.{c}").alias(c) for c in cols])
-            )
-        else:
-            if self.winner_mode == "full":
-                winners = self._dedup(valid)
-            else:
-                winner_seqs = self._winner_seqs(valid)
-                winners = self._fetch_winners(events, winner_seqs)
-            placed = winners.withColumn(
-                "__b", self.table._bucket_expr("url", n_buckets)
-            ).repartition(max(n_buckets, 1), F.col("__b")).drop("__b")
+        # Winner selection + bucket placement: a dedup exchange on url
+        # (map-side combined, so a hot url ships at most one row per map
+        # task), then a second exchange placing winners by bucket.
+        # Extraction runs AFTER placement, so shuffled bytes are raw html,
+        # never html+text.
+        winners = self._resolve_latest(valid)
+        placed = winners.withColumn(
+            "__b", self.table._bucket_expr("url", n_buckets)
+        ).repartition(max(n_buckets, 1), F.col("__b")).drop("__b")
         if self.extract_versions:
             extracted = with_extracted_text_versioned(
                 placed, self.extract_versions, epoch_col="epoch", html_col="html", out_text="text"
-            )
-        elif self.extractor == "jvm":
-            extracted = placed.withColumn("text", _jvm_extract_expr()).withColumn(
-                "__extract_err", F.lit(None).cast("string")
             )
         else:
             extracted = with_extracted_text(placed, html_col="html", out_text="text")
@@ -530,22 +399,9 @@ class CdcPipeline:
         the decoded text, since the ratio rule counts U+FFFD in the DECODED
         string) prunes ~99.8% of rows before any byte crosses to Python."""
         candidates = events.filter((F.length("html") > 0) & ~_is_ok_fast_expr())
-        if self.extractor == "jvm":
-            # the capture arbiter must be the SAME rule apply_batch used to
-            # exclude the rows — in jvm mode that is the fast path itself.
-            # Re-arbitrating with the python ratio rule here would silently
-            # drop rows the two rules disagree on (e.g. a short page with
-            # two invalid bytes: invalid UTF-8, but replacement ratio < 0.3).
-            q = candidates.withColumn(
-                "__q_err",
-                F.when(
-                    F.is_valid_utf8(F.col("html")), F.lit("replacement_char_literal")
-                ).otherwise(F.lit("invalid_encoding")),
-            )
-        else:
-            q = candidates.withColumn(
-                "__q_err", check_quarantine_udf()(F.col("html"))
-            ).filter(F.col("__q_err").isNotNull())
+        q = candidates.withColumn(
+            "__q_err", check_quarantine_udf()(F.col("html"))
+        ).filter(F.col("__q_err").isNotNull())
         return self._write_quarantine(q, batch_id)
 
     def _write_quarantine(self, df: DataFrame, batch_id: int, suffix: str = "") -> int:
@@ -683,7 +539,8 @@ class CdcPipeline:
     # ------------------------------------------------------------ reads
 
     def _resolve_latest(self, df: DataFrame) -> DataFrame:
-        """Latest-wins reducer over base+delta rows (MOR read resolution)."""
+        """Latest-wins per url on (warc_ts, seq): the batch dedup, the audit
+        oracle's dedup and the MOR read resolution over base+delta rows."""
         return latest_wins_agg(df, key="url", order_cols=["warc_ts", "seq"])
 
     def pages(self) -> DataFrame:
@@ -756,31 +613,14 @@ class CdcPipeline:
         Same logical shape as apply: masked single-scan validity check
         (valid-utf8 rows never cross the Arrow channel), then the
         single-phase latest-wins dedup — ONE scan of the log, map-side
-        combine before the exchange. (The two-phase key-only + payload
-        re-fetch shape was measured 2x slower in the round-3 A/B AND its
-        winner set — one row per distinct url in the corpus — is unbounded
-        here, so there is no broadcast to exploit; see BENCH.md.)"""
+        combine before the exchange."""
         events = self._normalize(events)
         is_ok_fast = _is_ok_fast_expr()
-        if self.extractor == "jvm":
-            # oracle mirrors the jvm apply path exactly: fast-path validity
-            # is the arbiter, extraction is the shared JVM expression.
-            # NULL-html rows: apply's `when(~is_ok_fast, ...)` yields a NULL
-            # error (row KEPT), but a bare filter(is_ok_fast) evaluates to
-            # NULL and would DROP the row — coalesce mirrors apply's null
-            # semantics so a NULL-html event cannot read as divergence
-            # (r5 ADVICE #1).
-            valid = events.filter(F.coalesce(is_ok_fast, F.lit(True)))
-            winners = self._dedup(valid)
-            alive = winners.filter(F.col("op") != "delete")
-            return alive.withColumn("text", _jvm_extract_expr()).select(
-                "url", "warc_ts", "html", "text", "lang"
-            )
         masked = F.when(~is_ok_fast, F.col("html"))
         valid = events.withColumn("__q_err", check_quarantine_udf()(masked)).filter(
             F.col("__q_err").isNull()
         ).drop("__q_err")
-        winners = self._dedup(valid)
+        winners = self._resolve_latest(valid)
         alive = winners.filter(F.col("op") != "delete")
         return with_extracted_text(alive).filter(F.col("__extract_err").isNull()).select(
             "url", "warc_ts", "html", "text", "lang"

@@ -170,7 +170,9 @@ def run_stream_available_now(
     per-batch stats. Restart-safe: source offsets come from the checkpoint,
     sink idempotency from the lakehouse epoch commits. Supports mid-stream
     schema evolution and the audit/maintenance cadences (see
-    :func:`_make_handler`)."""
+    :func:`_make_handler`). Raises ``TimeoutError``, after stopping the
+    query, when the log is not drained within ``timeout_sec``; batches
+    applied before the stop stay committed and a restart skips them."""
     os.makedirs(checkpoint_dir, exist_ok=True)
     _ensure_id_scheme(checkpoint_dir)
     stats: list[dict] = []
@@ -193,7 +195,14 @@ def run_stream_available_now(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_sec)
+    # awaitTermination refuses a non-positive timeout: that budget is spent
+    finished = q.awaitTermination(timeout_sec) if timeout_sec > 0 else not q.isActive
+    if not finished:
+        # a timed-out catch-up must not read as complete, nor leave the
+        # query running behind the caller
+        q.stop()
+        q.awaitTermination(30)
+        raise TimeoutError(f"available-now stream did not drain the log within {timeout_sec}s")
     return stats
 
 

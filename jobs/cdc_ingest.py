@@ -55,7 +55,6 @@ def main() -> int:
     ap.add_argument("--num-buckets", type=int, default=4096,
                     help="table buckets; size so one bucket fits an executor")
     ap.add_argument("--sink-mode", choices=["cow", "mor"], default="mor")
-    ap.add_argument("--winner-mode", choices=["full", "keys", "bucket"], default="full")
     ap.add_argument("--compact-every", type=int, default=8)
     ap.add_argument("--max-files-per-trigger", type=int, default=None)
     ap.add_argument("--trigger-seconds", type=float, default=5.0)
@@ -116,7 +115,6 @@ def main() -> int:
         args.work,
         sink_mode=args.sink_mode,
         compact_every=args.compact_every,
-        winner_mode=args.winner_mode,
         quarantine_mode="deferred" if args.mode == "replay" else "batch",
         canonicalize_keys=args.canonicalize_keys,
     )

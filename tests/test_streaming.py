@@ -3,6 +3,8 @@ checkpointed restart (T1/T2/T11 analogs)."""
 
 from __future__ import annotations
 
+import pytest
+
 from cosmwasm_etl_spark.plans.pipeline import CdcPipeline, create_pages_table
 from cosmwasm_etl_spark.sources.eventlog import synthetic_events, write_event_log
 from cosmwasm_etl_spark.streaming.runner import run_stream_available_now
@@ -33,6 +35,30 @@ def test_stream_available_now_matches_oracle(spark, tmp_path):
     more.repartition(2).write.mode("append").parquet(log_dir)
     stats3 = run_stream_available_now(spark, pipe, log_dir, str(tmp_path / "ckpt"))
     assert [s for s in stats3 if not s.get("skipped")]
+    assert pipe.audit(spark.read.parquet(log_dir)).count() == 0
+
+
+@pytest.mark.parametrize("timeout_sec", [0, 1])
+def test_stream_available_now_timeout_stops_and_raises(spark, tmp_path, timeout_sec):
+    """A catch-up that cannot drain the log within its timeout must raise
+    and stop its query — not return partial stats as if it had finished
+    and leave the query running. A restart then drains the rest."""
+    events = synthetic_events(spark, 2_000, n_urls=200, events_per_epoch=500)
+    log_dir = str(tmp_path / "events")
+    write_event_log(events, log_dir, range_partitions=4)
+    table = create_pages_table(spark, str(tmp_path / "pages"), num_buckets=4)
+    pipe = CdcPipeline(spark, table, str(tmp_path / "work"))
+    ckpt = str(tmp_path / "ckpt")
+    try:
+        with pytest.raises(TimeoutError):
+            run_stream_available_now(
+                spark, pipe, log_dir, ckpt, max_files_per_trigger=1, timeout_sec=timeout_sec
+            )
+        assert spark.streams.active == []
+    finally:
+        for q in spark.streams.active:
+            q.stop()
+    run_stream_available_now(spark, pipe, log_dir, ckpt)
     assert pipe.audit(spark.read.parquet(log_dir)).count() == 0
 
 
