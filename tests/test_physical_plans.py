@@ -124,6 +124,51 @@ def test_apply_write_plan_has_two_exchanges_and_one_scan(spark, tmp_path, monkey
     assert plan.count("FileScan parquet") == 1, plan
 
 
+def test_bucket_mode_apply_has_single_exchange(spark, tmp_path):
+    """A repartition on the table's bucket function followed by a
+    per-(bucket, url) latest-wins aggregate adds NO second exchange: the
+    aggregate's clustered-distribution requirement is satisfied by the
+    bucket partitioning."""
+    from cosmwasm_etl_spark.sources.eventlog import synthetic_events, write_event_log
+
+    ev = synthetic_events(spark, 2_000, n_urls=200, events_per_epoch=500)
+    write_event_log(ev, str(tmp_path / "ev"), range_partitions=2)
+    events = spark.read.parquet(str(tmp_path / "ev"))
+    bexpr = F.pmod(F.xxhash64(F.col("url")), F.lit(8)).cast("int")
+    cols = events.columns
+    row = F.struct(*[F.col(c) for c in cols])
+    placed = (
+        events.withColumn("__b", bexpr)
+        .repartition(8, F.col("__b"))
+        .groupBy("__b", "url")
+        .agg(F.max_by(row, F.struct("warc_ts", "seq")).alias("__r"))
+        .select(*[F.col(f"__r.{c}").alias(c) for c in cols])
+    )
+    plan = _plan(placed)
+    assert plan.count("Exchange") == 1, plan
+
+
+def test_dedup_exchange_is_narrow(spark, tmp_path):
+    """latest_wins_agg over the key columns alone (url, warc_ts, seq) keeps
+    the html payload out of the dedup shuffle; the payload side is joined
+    back via broadcast, never shuffled."""
+    from cosmwasm_etl_spark.sources.eventlog import synthetic_events, write_event_log
+
+    ev = synthetic_events(spark, 2_000, n_urls=200, events_per_epoch=500)
+    write_event_log(ev, str(tmp_path / "ev"), range_partitions=2)
+    events = spark.read.parquet(str(tmp_path / "ev"))
+    keys = events.select("url", "warc_ts", "seq")
+    winner_seqs = latest_wins_agg(keys, key="url", order_cols=["warc_ts", "seq"]).select("seq")
+    fetched = events.join(F.broadcast(winner_seqs), "seq")
+    plan = _formatted(fetched)
+    # the scan feeding the aggregate exchange reads only the 3 key columns
+    scans = [seg.splitlines()[0] for seg in plan.split("ReadSchema: ")[1:]]
+    assert any("html" not in s and "url" in s for s in scans), scans
+    # and the payload side is joined via broadcast, never shuffled
+    assert "BroadcastHashJoin" in plan
+    assert plan.count("Exchange hashpartitioning") <= 1  # only the key agg
+
+
 def test_gopher_quality_is_zero_shuffle_projection(spark, sf_dir):
     """The repetition stats ride ONE scan with no exchange — the
     longest-run-in-sorted-array form replaces the textbook explode +
