@@ -43,6 +43,18 @@ _RE_TAG_UNCLOSED = re.compile(r"<[^>]*\Z", re.DOTALL)
 _RE_WS = re.compile(r"\s+")
 
 
+def _decode_or_quarantine(data: bytes | None) -> tuple[str, str | None]:
+    """The quarantine rule, shared by every extractor version and the cheap
+    pre-check: utf-8 decode with U+FFFD replacement, and a replacement ratio
+    above 30% -> ("", "invalid_encoding"). Empty/None input decodes to ""."""
+    if data is None or len(data) == 0:
+        return "", None
+    raw = bytes(data).decode("utf-8", errors="replace")
+    if raw.count("�") / len(raw) > _MAX_REPLACEMENT_RATIO:
+        return "", "invalid_encoding"
+    return raw, None
+
+
 def extract_text_bytes(data: bytes | None) -> tuple[str, str | None]:
     """Pure, deterministic extraction core. Returns (text, err_reason|None).
 
@@ -54,13 +66,9 @@ def extract_text_bytes(data: bytes | None) -> tuple[str, str | None]:
       4. unescape HTML entities (stdlib html.unescape, incl. numeric)
       5. collapse all whitespace runs to single spaces; strip ends
     """
-    if data is None or len(data) == 0:
-        return "", None
-    raw = bytes(data).decode("utf-8", errors="replace")
-    if len(raw) > 0:
-        ratio = raw.count("�") / len(raw)
-        if ratio > _MAX_REPLACEMENT_RATIO:
-            return "", "invalid_encoding"
+    raw, err = _decode_or_quarantine(data)
+    if err is not None:
+        return "", err
     s = _RE_SCRIPT_STYLE.sub(" ", raw)
     s = _RE_COMMENT.sub(" ", s)
     s = _RE_TAG.sub(" ", s)
@@ -75,12 +83,7 @@ def check_quarantine_bytes(data: bytes | None) -> str | None:
     ``err`` reason :func:`extract_text_bytes` would, without paying for tag
     stripping. Lets the pipeline quarantine-check EVERY event but run full
     extraction only on dedup winners (scale: winners ≪ events)."""
-    if data is None or len(data) == 0:
-        return None
-    raw = bytes(data).decode("utf-8", errors="replace")
-    if raw and raw.count("�") / len(raw) > _MAX_REPLACEMENT_RATIO:
-        return "invalid_encoding"
-    return None
+    return _decode_or_quarantine(data)[1]
 
 
 @_functools.lru_cache(maxsize=1)
@@ -95,38 +98,14 @@ def check_quarantine_udf():
     return _udf
 
 
-@_functools.lru_cache(maxsize=1)
-def extract_text_udf():
-    """Arrow-vectorized wrapper over :func:`extract_text_bytes`."""
-    ret = T.StructType(
-        [T.StructField("text", T.StringType()), T.StructField("err", T.StringType())]
-    )
-
-    @pandas_udf(ret)
-    def _udf(html_col: pd.Series) -> pd.DataFrame:
-        texts: list[str] = []
-        errs: list[str | None] = []
-        for v in html_col:
-            t, e = extract_text_bytes(v)
-            texts.append(t)
-            errs.append(e)
-        return pd.DataFrame({"text": texts, "err": errs})
-
-    return _udf
-
-
 def extract_text_bytes_v2(data: bytes | None) -> tuple[str, str | None]:
     """Parser version 2 (M5 analog — the reference dispatches mapper
     versions by height, `parser/dex/dezswap/pair.mappers.go:41-58`,
     `MainnetV2Height` in `pkg/dex/dezswap/consts.go`): v1 rules plus
     stripping of <noscript>/<template> blocks."""
-    if data is None or len(data) == 0:
-        return "", None
-    raw = bytes(data).decode("utf-8", errors="replace")
-    if raw:
-        ratio = raw.count("�") / len(raw)
-        if ratio > _MAX_REPLACEMENT_RATIO:
-            return "", "invalid_encoding"
+    raw, err = _decode_or_quarantine(data)
+    if err is not None:
+        return "", err
     s = re.sub(r"<(noscript|template)\b[^>]*>.*?</\1\s*>", " ", raw, flags=re.I | re.S)
     s = _RE_SCRIPT_STYLE.sub(" ", s)
     s = _RE_COMMENT.sub(" ", s)
@@ -142,6 +121,7 @@ _EXTRACTORS = {1: extract_text_bytes, 2: extract_text_bytes_v2}
 
 @_functools.lru_cache(maxsize=4)
 def extract_text_udf_v(version: int = 1):
+    """Arrow-vectorized wrapper over the extractor core of ``version``."""
     core = _EXTRACTORS[version]
     ret = T.StructType(
         [T.StructField("text", T.StringType()), T.StructField("err", T.StringType())]
@@ -222,7 +202,7 @@ def with_extracted_text(df, html_col: str = "html", out_text: str = "text", out_
     """
     tmp = "__extract_struct"
     return (
-        df.withColumn(tmp, extract_text_udf()(F.col(html_col)))
+        df.withColumn(tmp, extract_text_udf_v(1)(F.col(html_col)))
         .withColumn(out_text, F.col(f"{tmp}.text"))
         .withColumn(out_err, F.col(f"{tmp}.err"))
         .drop(tmp)

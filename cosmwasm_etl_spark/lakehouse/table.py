@@ -49,20 +49,11 @@ class TableState:
         self.key_col: str = ""
         self.ts_col: str = ""
         self.num_buckets: int = 0
-        # sink-mode provenance: "" until the first delta commit, then "mor"
-        # (sticky). A reader that resolves the table in cow mode while delta
-        # files are live would silently see one stale row per un-compacted
-        # delta — recording the mode in the log lets readers adopt it and
-        # lets an explicit-cow reader be refused while deltas are active
-        # (the reference's single-process design never has this split;
-        # multi-session readers here do).
-        self.sink_mode: str = ""
         self.delta_files: set[str] = set()
         # key-normalization provenance ("exact" | "canonical"): stamped by
         # the first data commit and sticky thereafter — a pipeline opened
         # with the other normalization would silently re-key already-
-        # committed rows, so mismatches are refused at pipeline init
-        # (same hazard class as sink-mode adoption above).
+        # committed rows, so mismatches are refused at pipeline init.
         self.key_norm: str = ""
 
     def to_dict(self) -> dict:
@@ -76,7 +67,6 @@ class TableState:
             "key_col": self.key_col,
             "ts_col": self.ts_col,
             "num_buckets": self.num_buckets,
-            "sink_mode": self.sink_mode,
             "delta_files": sorted(self.delta_files),
             "key_norm": self.key_norm,
         }
@@ -93,7 +83,6 @@ class TableState:
         st.key_col = d["key_col"]
         st.ts_col = d["ts_col"]
         st.num_buckets = d["num_buckets"]
-        st.sink_mode = d.get("sink_mode", "")
         st.delta_files = set(d.get("delta_files", []))
         st.key_norm = d.get("key_norm", "")
         return st
@@ -271,7 +260,6 @@ class LakeTable:
             for e in c.get("add", []):
                 st.files[e["path"]] = e
             if c["operation"] == "delta":
-                st.sink_mode = "mor"
                 st.delta_files.update(e["path"] for e in c.get("add", []))
             summ = c.get("summary", {})
             if summ.get("epoch") is not None:
@@ -327,7 +315,6 @@ class LakeTable:
             "key_col": st.key_col,
             "ts_col": st.ts_col,
             "num_buckets": st.num_buckets,
-            "sink_mode": st.sink_mode or "cow",
             "key_norm": st.key_norm,
             "watermark": st.watermark,
             "epochs": len(st.epochs),
@@ -789,6 +776,7 @@ class LakeTable:
         summary = {
             "epoch": epoch,
             "watermark": watermark,
+            "affected_buckets": sorted({e["bucket"] for e in adds}),
             "added_rows": sum(e["rows"] for e in adds),
             "ts": time.time(),
         }

@@ -186,7 +186,7 @@ class IngestNearDupIndex:
         them replaces the events-side distinct AND the driver bucket
         collect with a metadata walk. Returns None (→ fallback to the
         events-derived path) when the wired reader is not a CdcPipeline,
-        the batch has no delta commit (cow mode, foreign epoch), or a
+        the batch has no delta commit (a foreign epoch), or a
         compaction+vacuum already dropped the files."""
         import os
 

@@ -12,10 +12,12 @@ per-height loop, batched):
    ``max_by`` aggregate (hot-domain-skew-proof, see operators.dedup_window);
 3. **extraction** (html→text pandas UDF) on dedup *winners only* —
    winners ≪ events, so the Python-side work is minimized;
-4. **MERGE** into the lakehouse pages table in ONE atomic commit carrying
-   the batch id + high-watermark — the analog of the reference's
+4. **delta append** to the lakehouse pages table in ONE atomic commit
+   carrying the batch id + high-watermark — the analog of the reference's
    single-Postgres-transaction insert + synced-height CAS
-   (`parser/dex/repo/repository.go:98-122`);
+   (`parser/dex/repo/repository.go:98-122`); reads resolve latest-wins
+   across base and delta rows, and every ``compact_every`` batches a
+   compaction folds the deltas into base;
 5. **lineage** row (batch id, seq range, affected buckets, snapshot version,
    counts, duration) — T12 observability, idempotently keyed by batch id.
 
@@ -104,7 +106,7 @@ class CdcPipeline:
         spark: SparkSession,
         table: LakeTable,
         work_dir: str,
-        sink_mode: str | None = None,
+        sink_mode: str = "mor",
         compact_every: int = 8,
         extract_versions: list[tuple[int, int]] | None = None,
         quarantine_mode: str = "batch",
@@ -112,17 +114,10 @@ class CdcPipeline:
         winner_mode: str = "full",
         canonicalize_keys: bool = False,
     ):
-        """``sink_mode``:
-
-        - ``"cow"`` — copy-on-write MERGE per batch (read-optimized: table
-          always holds one row per key; batch cost grows with affected-bucket
-          size).
-        - ``"mor"`` — merge-on-read: batches append delta files (O(batch)
-          ingest cost), reads resolve latest-wins, and every
-          ``compact_every`` applied batches a compaction folds deltas into
-          base. The sustained-ingest configuration for the 10^10 design
-          point.
-        """
+        """The pages table has one sink: every batch appends delta files
+        (O(batch) ingest cost), reads resolve latest-wins across base and
+        delta rows, and every ``compact_every`` applied batches a compaction
+        folds the deltas into base."""
         self.spark = spark
         self.table = table
         self.work_dir = os.path.abspath(work_dir)
@@ -130,24 +125,9 @@ class CdcPipeline:
         self.lineage_dir = os.path.join(self.work_dir, "lineage")
         os.makedirs(self.quarantine_dir, exist_ok=True)
         os.makedirs(self.lineage_dir, exist_ok=True)
-        # sink_mode=None adopts the TABLE's recorded mode (the commit log
-        # remembers whether deltas were ever written) — a second session
-        # opening an ingest table gets correct reads without out-of-band
-        # coordination. Explicit "cow" over live un-compacted deltas is
-        # refused: that read silently returns superseded rows.
-        if sink_mode is None:
-            sink_mode = table.state().sink_mode or "cow"
-        elif sink_mode == "cow":
-            st = table.state()
-            if st.delta_files:
-                raise ValueError(
-                    "table has un-compacted delta files (written in mor mode); "
-                    "a cow-mode read would return superseded rows — pass "
-                    "sink_mode='mor' (or None to adopt the recorded mode)"
-                )
-        if sink_mode not in ("cow", "mor"):
-            raise ValueError(f"unknown sink_mode: {sink_mode}")
-        self.sink_mode = sink_mode
+        # The keyword survives only for callers that still pass "mor".
+        if sink_mode != "mor":
+            raise ValueError(f"unknown sink_mode: {sink_mode} (only 'mor' is supported)")
         self.compact_every = compact_every
         self._applied_since_compact = 0
         # M5 version dispatch: [(from_epoch, extractor_version), ...]
@@ -349,20 +329,10 @@ class CdcPipeline:
                 "min_seq": got["min_seq"],
             }
 
-        if self.sink_mode == "mor":
-            res = self.table.append_delta(
-                batch, epoch=batch_id, summary_fn=_observed_summary, pre_partitioned=True,
-                extra_summary={"key_norm": self._key_norm},
-            )
-        else:
-            res = self.table.merge_upserts(
-                batch,
-                epoch=batch_id,
-                op_col=None,  # tombstone pattern: deletes are flagged upserts
-                order_cols=["warc_ts", "seq"],
-                summary_fn=_observed_summary,
-                extra_summary={"key_norm": self._key_norm},
-            )
+        res = self.table.append_delta(
+            batch, epoch=batch_id, summary_fn=_observed_summary, pre_partitioned=True,
+            extra_summary={"key_norm": self._key_norm},
+        )
 
         got = _merged_obs()
         n_events, max_seq = got["n"], got["max_seq"]
@@ -371,11 +341,10 @@ class CdcPipeline:
         if n_quarantined and self.quarantine_mode == "batch":
             self._capture_quarantine(events, batch_id)
 
-        if self.sink_mode == "mor":
-            self._applied_since_compact += 1
-            if self._applied_since_compact >= self.compact_every:
-                self.table.compact(self._resolve_latest)
-                self._applied_since_compact = 0
+        self._applied_since_compact += 1
+        if self._applied_since_compact >= self.compact_every:
+            self.table.compact(self._resolve_latest)
+            self._applied_since_compact = 0
 
         stats = {
             "batch_id": batch_id,
@@ -385,7 +354,6 @@ class CdcPipeline:
             "min_seq": int(got["min_seq"]) if got["min_seq"] is not None else None,
             "max_seq": int(max_seq) if max_seq is not None else None,
             "table_version": res.get("version"),
-            "rows_after": res.get("rows_after"),
             "duration_ms": int((time.time() - t0) * 1000),
         }
         self._write_lineage(stats)
@@ -545,13 +513,9 @@ class CdcPipeline:
 
     def pages(self) -> DataFrame:
         """Active (non-tombstoned) pages: canonical input_hint columns plus
-        ``seq`` and any schema-evolved columns.
-
-        In COW mode the table already holds one row per key; in MOR mode the
-        read resolves latest-wins across un-compacted deltas first."""
-        df = self.table.read()
-        if self.sink_mode == "mor":
-            df = self._resolve_latest(df)
+        ``seq`` and any schema-evolved columns. The read resolves
+        latest-wins across base and un-compacted delta rows first."""
+        df = self._resolve_latest(self.table.read())
         out_cols = [c for c in df.columns if c != "deleted"]
         return df.filter(~F.col("deleted")).select(*out_cols)
 
@@ -597,7 +561,16 @@ class CdcPipeline:
         """Retention pass (S12 analog): physically drop tombstones older than
         the given timestamp — safe once no replay can deliver events older
         than it. ``ts_upper`` lets the table prune non-overlapping files
-        from footer stats before any scan."""
+        from footer stats before any scan.
+
+        Live deltas are compacted first: while a key still has several
+        rows, dropping its tombstone would let an older live row (a base
+        row, or a late older update in another file) win the read-time
+        resolution again and bring the deleted url back. After compaction
+        each key has one row, so dropping its tombstone removes the key."""
+        if self.table.state().delta_files:
+            self.table.compact(self._resolve_latest)
+            self._applied_since_compact = 0
         return self.table.delete_where(
             f"deleted AND warc_ts < timestamp'{older_than_ts}'",
             epoch=epoch,
@@ -673,7 +646,9 @@ class CdcPipeline:
         tombstones older than (table max warc_ts − horizon) — the cutoff
         comes from file-footer ts stats, zero data read — then vacuum
         de-referenced parquet. Both steps are idempotent and bounded, so a
-        cadence can call this after any batch."""
+        cadence can call this after any batch. The tombstone pass compacts
+        live deltas before it drops anything (see :meth:`vacuum_tombstones`),
+        so a deleted url cannot come back."""
         import datetime as _dt
 
         out: dict = {}
@@ -720,21 +695,23 @@ class CdcPipeline:
     def retry_quarantine(self, batch_id: int, extractor=None) -> dict:
         """Re-attempt quarantined events (T8 retry,
         `parser/dex/dex.go:282-320`): rows whose extraction now succeeds are
-        merged (latest-wins condition in MERGE protects newer table rows)
-        AND leave the quarantine store; still-failing rows stay, with their
-        error refreshed. Pass a custom ``extractor`` (df→df with
+        appended as a delta, the same way a batch is applied (the read-time
+        latest-wins resolution on (warc_ts, seq) keeps newer table rows
+        winning), AND leave the quarantine store; still-failing rows stay,
+        with their error refreshed. Pass a custom ``extractor`` (df→df with
         text/__extract_err) to model a fixed parser version.
 
-        Resolution lifecycle (r4 "What's wrong" #1): after the merge the
+        Resolution lifecycle (r4 "What's wrong" #1): after the append the
         store is compacted to exactly the still-failing rows, so repeated
         retry passes never re-extract resolved rows and the store cannot
         grow without bound. The extractor runs exactly ONCE per pass — its
-        output is staged to parquet, and both the merge and the compaction
-        read the staging, not the extractor plan. Crash-safety: the merge
+        output is staged to parquet, and both the append and the compaction
+        read the staging, not the extractor plan. Crash-safety: the append
         commit is the atomic point; a crash before compaction leaves
         resolved rows in the store, and the NEXT retry pass converges —
-        its merge (a later retry epoch) re-applies idempotently under the
-        latest-wins guard and its compaction clears them.
+        its append (a later retry epoch) re-adds rows whose seqs are
+        already in the table, which the read-time resolution collapses,
+        and its compaction clears them.
         (Reference analog: the atomic quarantine upsert+delete,
         `parser/dex/repo/repository.go:302-330`.)"""
         import glob as _glob
@@ -769,13 +746,12 @@ class CdcPipeline:
         # genuinely replayed retry is still skipped idempotently, but that is
         # surfaced to the caller instead of silently reporting success.
         retry_epoch = _RETRY_EPOCH_BASE - int(batch_id)
-        res = self.table.merge_upserts(
-            batch, epoch=retry_epoch, op_col=None, order_cols=["warc_ts", "seq"],
-            extra_summary={"key_norm": self._key_norm},
+        res = self.table.append_delta(
+            batch, epoch=retry_epoch, extra_summary={"key_norm": self._key_norm},
         )
         # compaction runs on the skipped (already-committed) path too — that
         # is exactly the crash-heal case where the previous pass committed
-        # its merge but died before clearing resolved rows
+        # its append but died before clearing resolved rows
         still = staged.filter(F.col("__extract_err").isNotNull()).select(
             "seq", "epoch", "op", "url", "warc_ts", "html", "lang",
             F.col("__extract_err").alias("err"), "batch_id",
@@ -794,7 +770,7 @@ class CdcPipeline:
         out = {
             "retried": int(got["retried"] or 0),
             "resolved": int(got["resolved"] or 0),
-            "merge": res,
+            "append": res,
         }
         if res.get("skipped"):
             out["skipped"] = True

@@ -54,7 +54,6 @@ def main() -> int:
     ap.add_argument("--epochs-per-batch", type=int, default=10)
     ap.add_argument("--num-buckets", type=int, default=4096,
                     help="table buckets; size so one bucket fits an executor")
-    ap.add_argument("--sink-mode", choices=["cow", "mor"], default="mor")
     ap.add_argument("--compact-every", type=int, default=8)
     ap.add_argument("--max-files-per-trigger", type=int, default=None)
     ap.add_argument("--trigger-seconds", type=float, default=5.0)
@@ -113,7 +112,6 @@ def main() -> int:
         spark,
         table,
         args.work,
-        sink_mode=args.sink_mode,
         compact_every=args.compact_every,
         quarantine_mode="deferred" if args.mode == "replay" else "batch",
         canonicalize_keys=args.canonicalize_keys,

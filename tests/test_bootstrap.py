@@ -81,7 +81,7 @@ def test_bootstrap_on_mor_table_with_uncompacted_deltas(spark, tmp_path):
     """merge_upserts on a MOR table resolves per stored row (several rows
     per key across deltas); the read-side latest-wins must make
     bootstrap-then-tail converge to the full-replay state exactly as on a
-    COW table — with NO intervening compaction."""
+    compacted table — with NO intervening compaction."""
     ev = synthetic_events(spark, 6_000, n_urls=800, events_per_epoch=500)
     head = ev.filter(F.col("epoch") < 6)
     tail = ev.filter(F.col("epoch") >= 6)
@@ -91,9 +91,7 @@ def test_bootstrap_on_mor_table_with_uncompacted_deltas(spark, tmp_path):
     p_full.run_replay(ev, epochs_per_batch=2)
 
     t_boot = create_pages_table(spark, str(tmp_path / "boot"), num_buckets=8)
-    p_boot = CdcPipeline(
-        spark, t_boot, str(tmp_path / "wb"), sink_mode="mor", compact_every=10_000
-    )
+    p_boot = CdcPipeline(spark, t_boot, str(tmp_path / "wb"), compact_every=10_000)
     p_boot.run_replay(head.filter(F.col("epoch") < 4), epochs_per_batch=2)
     raw = t_boot.read()
     assert raw.count() > raw.select("url").distinct().count(), "deltas uncompacted"

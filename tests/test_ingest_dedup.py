@@ -180,10 +180,9 @@ def test_empty_batch_advances_epochs_without_jobs(spark, tmp_path, events_df):
     """A batch window with zero events must still advance BOTH index
     epochs (idempotent replay bookkeeping) via the r6 metadata shortcut —
     log-only commits, no Spark job — and leave the invariants intact.
-    (mor mode, like the bench A/B: the empty delta commit is what the
-    shortcut reads.)"""
+    (The pipeline's empty delta commit is what the shortcut reads.)"""
     table = create_pages_table(spark, str(tmp_path / "pages"), num_buckets=4)
-    pipe = CdcPipeline(spark, table, str(tmp_path / "work"), sink_mode="mor")
+    pipe = CdcPipeline(spark, table, str(tmp_path / "work"))
     idx = IngestNearDupIndex(
         spark, str(tmp_path / "idx"), pipe.pages,
         pages_for_fn=pipe.pages_for, num_buckets=4,

@@ -106,7 +106,7 @@ def test_apply_write_plan_has_two_exchanges_and_one_scan(spark, tmp_path, monkey
     write_event_log(ev, str(tmp_path / "ev"), range_partitions=2)
     events = read_event_log(spark, str(tmp_path / "ev"))
     table = create_pages_table(spark, str(tmp_path / "pages"), num_buckets=8)
-    pipe = CdcPipeline(spark, table, str(tmp_path / "work"), sink_mode="mor")
+    pipe = CdcPipeline(spark, table, str(tmp_path / "work"))
     seen = []
     append_delta = LakeTable.append_delta
 

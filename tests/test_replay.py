@@ -231,10 +231,18 @@ def test_lineage_emitted_per_batch(spark, tmp_path, events_df):
         assert row["max_seq"] >= row["min_seq"]
         assert row["table_version"] is not None
         assert row["n_events"] > 0
-    # commit summaries carry affected buckets + watermark (per-partition lineage)
-    hist = pipe.table.history()
-    merges = [h for h in hist if h["operation"] == "merge"]
-    assert merges and all("affected_buckets" in m["summary"] for m in merges)
+    # delta commit summaries carry affected buckets + watermark
+    # (per-partition lineage), matching the buckets of the files they add
+    log = pipe.table.log
+    deltas = [
+        c for _, c in log.commits_since(log.min_version() - 1)
+        if c["operation"] == "delta"
+    ]
+    assert deltas
+    for c in deltas:
+        assert c["summary"]["watermark"] is not None
+        assert c["summary"]["affected_buckets"] == sorted({e["bucket"] for e in c["add"]})
+    assert any(c["summary"]["affected_buckets"] for c in deltas)
 
 
 @pytest.mark.parametrize("salt_buckets", [None, 8])
@@ -265,17 +273,24 @@ def test_latest_wins_window_matches_agg(spark, events_df, salt_buckets):
     assert hot_seq == 10 * N_EVENTS + max(i for i in range(600) if i * 7 % 6 == 5)
 
 
-def test_winner_mode_accepts_only_full(spark, tmp_path):
-    pipe = make_pipeline(spark, tmp_path, winner_mode="full")
-    for mode in ("keys", "bucket"):
-        with pytest.raises(ValueError, match="winner_mode"):
-            CdcPipeline(spark, pipe.table, pipe.work_dir, winner_mode=mode)
+@pytest.mark.parametrize(
+    "keyword,kept,refused",
+    [("winner_mode", "full", ("keys", "bucket")), ("sink_mode", "mor", ("cow",))],
+    ids=["winner_mode", "sink_mode"],
+)
+def test_winner_mode_accepts_only_full(spark, tmp_path, keyword, kept, refused):
+    """The leftover apply-path keywords accept only the one plan that ships."""
+    pipe = make_pipeline(spark, tmp_path, **{keyword: kept})
+    for mode in refused:
+        with pytest.raises(ValueError, match=keyword):
+            CdcPipeline(spark, pipe.table, pipe.work_dir, **{keyword: mode})
 
 
 def test_mor_sink_equivalent_and_compacts(spark, tmp_path, events_df):
-    """Merge-on-read sink: delta appends + periodic compaction converge to
-    the same state as COW, including across a restart mid-stream."""
-    pipe = make_pipeline(spark, tmp_path, sink_mode="mor", compact_every=3)
+    """The pages sink: delta appends + periodic compaction audit clean
+    against the replay oracle, and a full compaction leaves one row per
+    key that still audits clean."""
+    pipe = make_pipeline(spark, tmp_path, compact_every=3)
     stats = pipe.run_replay(events_df, epochs_per_batch=EPB)
     assert all(not s.get("skipped") for s in stats)
     assert pipe.audit(events_df).count() == 0
@@ -288,31 +303,36 @@ def test_mor_sink_equivalent_and_compacts(spark, tmp_path, events_df):
     assert pipe.audit(events_df).count() == 0
 
 
-def test_sink_mode_recorded_adopted_and_guarded(spark, tmp_path, events_df):
-    """The commit log records mor-mode provenance: a SECOND session (fresh
-    pipeline, default sink_mode=None) adopts the table's recorded mode, and
-    an explicit cow-mode reader is refused while un-compacted deltas are
-    live (a cow read over deltas silently returns superseded rows — the
-    exact bug class the spark-submit e2e test first exposed)."""
-    pipe = make_pipeline(spark, tmp_path, sink_mode="mor", compact_every=10_000)
-    pipe.run_replay(events_df, epochs_per_batch=EPB)
-    st = pipe.table.state()
-    assert st.sink_mode == "mor" and st.delta_files
+def test_tombstone_retention_keeps_deleted_url_gone(spark, tmp_path):
+    """Tombstone retention over live deltas: dropping a tombstone while an
+    older live row of the same url sits in another file must not bring the
+    deleted url back — the retention pass compacts first."""
+    import datetime as dt
 
-    # fresh pipeline over the same table: adopts mor, audit stays green
-    pipe2 = CdcPipeline(spark, pipe.table, str(tmp_path / "work2"))
-    assert pipe2.sink_mode == "mor"
-    assert pipe2.audit(events_df).count() == 0
+    from pyspark.sql import Row
 
-    with pytest.raises(ValueError, match="un-compacted delta"):
-        CdcPipeline(spark, pipe.table, str(tmp_path / "work3"), sink_mode="cow")
+    def ev(seq, epoch, op, url, year):
+        html = b"" if op == "delete" else f"<p>{url} {year}</p>".encode()
+        return Row(
+            seq=seq, epoch=epoch, op=op, url=url,
+            warc_ts=dt.datetime(year, 1, 1), html=html, lang="en",
+        )
 
-    # after full compaction there are no live deltas: explicit cow is a
-    # conscious, now-safe mode switch — allowed
-    pipe.table.compact(pipe._resolve_latest)
-    assert not pipe.table.state().delta_files
-    pipe3 = CdcPipeline(spark, pipe.table, str(tmp_path / "work4"), sink_mode="cow")
-    assert pipe3.audit(events_df).count() == 0
+    schema = "seq long, epoch long, op string, url string, warc_ts timestamp, html binary, lang string"
+    batch0 = spark.createDataFrame([ev(0, 0, "insert", "a", 2020)], schema)
+    batch1 = spark.createDataFrame(
+        [ev(1, 1, "delete", "a", 2021), ev(2, 1, "insert", "b", 2024)], schema
+    )
+    pipe = make_pipeline(spark, tmp_path, compact_every=1000)
+    pipe.apply_batch(batch0, 0)
+    pipe.apply_batch(batch1, 1)
+    # a's insert and its tombstone sit in separate live delta files
+    assert len(pipe.table.state().delta_files) >= 2
+    assert [r.url for r in pipe.pages().collect()] == ["b"]
+
+    pipe.maintenance(tombstone_horizon_sec=0)
+    assert [r.url for r in pipe.pages().collect()] == ["b"]
+    assert pipe.audit(batch0.unionByName(batch1)).count() == 0
 
 
 def test_literal_ufffd_page_is_quarantined_not_dropped(spark, tmp_path):

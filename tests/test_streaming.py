@@ -262,7 +262,7 @@ def test_stream_maintenance_cadence_bounds_disk(spark, tmp_path):
     write_event_log(ev, log_dir, range_partitions=10)
 
     table = create_pages_table(spark, str(tmp_path / "pages"), num_buckets=8)
-    pipe = CdcPipeline(spark, table, str(tmp_path / "work"), sink_mode="cow")
+    pipe = CdcPipeline(spark, table, str(tmp_path / "work"))
     stats = run_stream_available_now(
         spark, pipe, log_dir, str(tmp_path / "ckpt"),
         max_files_per_trigger=2,
@@ -271,6 +271,8 @@ def test_stream_maintenance_cadence_bounds_disk(spark, tmp_path):
     maint = [s for s in stats if s.get("maintenance")]
     assert maint
     assert any(m.get("vacuum", {}).get("deleted_files", 0) > 0 for m in maint)
+    # tombstone retention never brings a deleted url back
+    assert pipe.audit(ev).count() == 0
     # horizon=0: every tombstone older than max warc_ts is droppable;
     # the final table must hold no deleted rows older than the horizon
     # and time travel within the retained horizon still works
