@@ -119,6 +119,21 @@ def extract_text_bytes_v2(data: bytes | None) -> tuple[str, str | None]:
 _EXTRACTORS = {1: extract_text_bytes, 2: extract_text_bytes_v2}
 
 
+def extractor_for_epoch(bounds, epoch: int):
+    """The extractor core for ``epoch`` under sorted ``(from_epoch,
+    version)`` bounds: the version of the greatest boundary ≤ ``epoch``.
+    Rows before the first boundary use the first version (the reference's
+    default-mapper behavior, `parser/dex/dezswap/pair.mappers.go:41-58`).
+    Both apply paths dispatch through this one rule."""
+    core = _EXTRACTORS[bounds[0][1]]
+    for from_epoch, version in bounds:
+        if epoch >= from_epoch:
+            core = _EXTRACTORS[version]
+        else:
+            break
+    return core
+
+
 @_functools.lru_cache(maxsize=4)
 def extract_text_udf_v(version: int = 1):
     """Arrow-vectorized wrapper over the extractor core of ``version``."""
@@ -147,9 +162,7 @@ def _extract_dispatch_udf(bounds: tuple[tuple[int, int], ...]):
     any Observation node in it) once per version; a ``when`` over N UDF
     columns would run every version on every row (Catalyst evaluates python
     UDFs unconditionally). Dispatching INSIDE one UDF keeps the plan linear
-    and runs exactly one extractor per row. Rows before the first boundary
-    use the first version (the reference's default-mapper behavior,
-    `parser/dex/dezswap/pair.mappers.go:41-58`)."""
+    and runs exactly one extractor per row (see :func:`extractor_for_epoch`)."""
     ret = T.StructType(
         [T.StructField("text", T.StringType()), T.StructField("err", T.StringType())]
     )
@@ -161,14 +174,7 @@ def _extract_dispatch_udf(bounds: tuple[tuple[int, int], ...]):
         errs: list[str | None] = [None] * n
         epochs = epoch_col.to_numpy()
         for i in range(n):
-            e = int(epochs[i])
-            core = _EXTRACTORS[bounds[0][1]]
-            for from_epoch, version in bounds:
-                if e >= from_epoch:
-                    core = _EXTRACTORS[version]
-                else:
-                    break
-            texts[i], errs[i] = core(html_col.iloc[i])
+            texts[i], errs[i] = extractor_for_epoch(bounds, int(epochs[i]))(html_col.iloc[i])
         return pd.DataFrame({"text": texts, "err": errs})
 
     return _udf

@@ -10,7 +10,9 @@ Everything here is an independent re-derivation from public algorithms:
   semantics (``org.apache.spark.sql.catalyst.expressions.XXH64``):
   IntegerType hashes via the 4-byte tail step, LongType via the 8-byte
   tail step, StringType as standard XXH64 over UTF-8 bytes; multi-arg
-  ``xxhash64(a, b, ...)`` folds left with seed 42.
+  ``xxhash64(a, b, ...)`` folds left with seed 42. The implementation
+  lives in :mod:`lakehouse.arrow_apply`, whose bucket routing uses it;
+  it is re-exported here.
 - Unicode tokenization mirroring ``functions.text.tokens`` (split on
   non-letter/digit/apostrophe, lowercase).
 - MinHash/LSH banding, SimHash voting, and random-hyperplane ANN exactly
@@ -34,109 +36,16 @@ import math
 import os
 from decimal import ROUND_HALF_UP, Decimal
 
-_MASK = (1 << 64) - 1
-_P1 = 0x9E3779B185EBCA87
-_P2 = 0xC2B2AE3D27D4EB4F
-_P3 = 0x165667B19E3779F9
-_P4 = 0x85EBCA77C2B2AE63
-_P5 = 0x27D4EB2F165667C5
-
-SPARK_SEED = 42  # Spark's default xxhash64 seed
-
-
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _MASK
-
-
-def _fmix(h: int) -> int:
-    h ^= h >> 33
-    h = (h * _P2) & _MASK
-    h ^= h >> 29
-    h = (h * _P3) & _MASK
-    h ^= h >> 32
-    return h
-
-
-def hash_int(i: int, seed: int) -> int:
-    """Spark XXH64 of an IntegerType value (the 4-byte tail step)."""
-    u = i & 0xFFFFFFFF
-    h = (seed + _P5 + 4) & _MASK
-    h ^= (u * _P1) & _MASK
-    h = (_rotl(h, 23) * _P2 + _P3) & _MASK
-    return _fmix(h)
-
-
-def hash_long(l: int, seed: int) -> int:
-    """Spark XXH64 of a LongType value (the 8-byte tail step)."""
-    u = l & _MASK
-    h = (seed + _P5 + 8) & _MASK
-    h ^= (_rotl((u * _P2) & _MASK, 31) * _P1) & _MASK
-    h = (_rotl(h, 27) * _P1 + _P4) & _MASK
-    return _fmix(h)
-
-
-def hash_bytes(data: bytes, seed: int) -> int:
-    """Standard XXH64 over a byte string (Spark StringType path)."""
-    n = len(data)
-    off = 0
-    if n >= 32:
-        v1 = (seed + _P1 + _P2) & _MASK
-        v2 = (seed + _P2) & _MASK
-        v3 = seed & _MASK
-        v4 = (seed - _P1) & _MASK
-        limit = n - 32
-        while off <= limit:
-            lane = int.from_bytes(data[off : off + 8], "little")
-            v1 = (_rotl((v1 + lane * _P2) & _MASK, 31) * _P1) & _MASK
-            lane = int.from_bytes(data[off + 8 : off + 16], "little")
-            v2 = (_rotl((v2 + lane * _P2) & _MASK, 31) * _P1) & _MASK
-            lane = int.from_bytes(data[off + 16 : off + 24], "little")
-            v3 = (_rotl((v3 + lane * _P2) & _MASK, 31) * _P1) & _MASK
-            lane = int.from_bytes(data[off + 24 : off + 32], "little")
-            v4 = (_rotl((v4 + lane * _P2) & _MASK, 31) * _P1) & _MASK
-            off += 32
-        h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)) & _MASK
-        for v in (v1, v2, v3, v4):
-            h ^= (_rotl((v * _P2) & _MASK, 31) * _P1) & _MASK
-            h = (h * _P1 + _P4) & _MASK
-    else:
-        h = (seed + _P5) & _MASK
-    h = (h + n) & _MASK
-    while off + 8 <= n:
-        lane = int.from_bytes(data[off : off + 8], "little")
-        h ^= (_rotl((lane * _P2) & _MASK, 31) * _P1) & _MASK
-        h = (_rotl(h, 27) * _P1 + _P4) & _MASK
-        off += 8
-    if off + 4 <= n:
-        lane = int.from_bytes(data[off : off + 4], "little")
-        h ^= (lane * _P1) & _MASK
-        h = (_rotl(h, 23) * _P2 + _P3) & _MASK
-        off += 4
-    while off < n:
-        h ^= (data[off] * _P5) & _MASK
-        h = (_rotl(h, 11) * _P1) & _MASK
-        off += 1
-    return _fmix(h)
-
-
-def to_signed(u: int) -> int:
-    """Two's-complement view of a 64-bit unsigned hash — Spark longs are
-    signed, so every comparison (array_min, ordering) must use this."""
-    u &= _MASK
-    return u - (1 << 64) if u >= 1 << 63 else u
-
-
-def xxh64_str(s: str, seed: int = SPARK_SEED) -> int:
-    """Signed Spark ``xxhash64(string_col)``."""
-    return to_signed(hash_bytes(s.encode("utf-8"), seed))
-
-
-def xxh64_longs(*vals: int, seed: int = SPARK_SEED) -> int:
-    """Signed Spark ``xxhash64(long_col, long_col, ...)`` (left fold)."""
-    h = seed
-    for v in vals:
-        h = hash_long(v, h)
-    return to_signed(h)
+from cosmwasm_etl_spark.lakehouse.arrow_apply import (  # noqa: F401 — re-exported
+    _MASK,
+    SPARK_SEED,
+    hash_bytes,
+    hash_int,
+    hash_long,
+    to_signed,
+    xxh64_longs,
+    xxh64_str,
+)
 
 
 def round_half_up(x: float, digits: int) -> float:

@@ -27,11 +27,13 @@ import os
 import time
 import uuid
 
+import pyarrow as _pa
 import pyarrow.parquet as _pq
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cosmwasm_etl_spark.lakehouse.arrow_apply import arrow_schema, bucket_of, split_by_bucket
 from cosmwasm_etl_spark.lakehouse.log import CHECKPOINT_INTERVAL, TableLog
 from cosmwasm_etl_spark.lakehouse.schema import TableSchema, align_to, evolve
 
@@ -383,7 +385,7 @@ class LakeTable:
 
         1. **bucket** — each key's bucket is computed driver-side with the
            same ``pmod(xxhash64(key), num_buckets)`` the writer used
-           (pure-Python xxhash64, :mod:`functions.pyoracle`); every other
+           (pure-Python xxhash64, :mod:`lakehouse.arrow_apply`); every other
            bucket's files are skipped from commit metadata alone.
         2. **per-file key range** — the ``min_key``/``max_key`` footer stats
            recorded in each add-entry drop files whose range can't contain
@@ -403,15 +405,13 @@ class LakeTable:
         :meth:`read_buckets` on the keys' buckets plus a broadcast semi-join,
         the shape the ingest-dedup candidate fetch uses.
         """
-        from cosmwasm_etl_spark.functions.pyoracle import xxh64_str
-
         st = self.state(version)
         uniq = sorted({k for k in keys if k is not None})
         if not st.files or not uniq:
             return self.spark.createDataFrame([], st.schema.to_spark())
         by_bucket: dict[int, list[str]] = {}
         for k in uniq:
-            by_bucket.setdefault(xxh64_str(k) % st.num_buckets, []).append(k)
+            by_bucket.setdefault(bucket_of(k, st.num_buckets), []).append(k)
         entries = self._lookup_entries(st, by_bucket)
         if not entries:
             return self.spark.createDataFrame([], st.schema.to_spark())
@@ -478,6 +478,26 @@ class LakeTable:
                 f"parquet.bloom.filter.enabled#{st.key_col}", "true"
             ).option(f"parquet.bloom.filter.expected.ndv#{st.key_col}", bloom_ndv)
         writer.parquet(stage_abs)
+        return self._add_entries(stage_abs, st)
+
+    def _write_arrow_files(self, tbl: "_pa.Table", st: TableState) -> list[dict]:
+        """Driver-side twin of :meth:`_write_files` for a small in-memory
+        batch: one pyarrow parquet file per touched bucket, under the same
+        ``data/<uuid>/__bucket=b/`` layout, rows kept in the caller's order.
+        pyarrow 16 writes no parquet bloom filters, so these files carry
+        none even when ``SPARK_GRAFT_PARQUET_BLOOM_NDV`` is set; compaction,
+        which runs on Spark, writes them."""
+        stage_abs = os.path.join(self.path, "data", uuid.uuid4().hex)
+        tbl = tbl.select(st.schema.names()).cast(arrow_schema(st.schema))
+        for bucket, part in split_by_bucket(tbl, st.key_col, st.num_buckets).items():
+            out_dir = os.path.join(stage_abs, f"{_BUCKET}={bucket}")
+            os.makedirs(out_dir)
+            _pq.write_table(part, os.path.join(out_dir, f"part-{uuid.uuid4().hex}.parquet"))
+        return self._add_entries(stage_abs, st)
+
+    def _add_entries(self, stage_abs: str, st: TableState) -> list[dict]:
+        """Add-entries (footer stats, no data read) for every non-empty
+        parquet file under a ``__bucket=b`` directory of ``stage_abs``."""
         entries: list[dict] = []
         todo: list[tuple[str, int]] = []
         for dirpath, _dirs, names in os.walk(stage_abs):
@@ -752,7 +772,7 @@ class LakeTable:
 
     def append_delta(
         self,
-        df: DataFrame,
+        df: "DataFrame | _pa.Table",
         epoch: int | None = None,
         watermark: int | None = None,
         summary_fn=None,
@@ -765,14 +785,22 @@ class LakeTable:
         (the caller's latest-wins over (ts, seq)); :meth:`compact` folds
         deltas back into one row per key. At the 10^10 design point this is
         the sustained-ingest path: COW merge cost grows with table size,
-        delta append cost only with batch size."""
+        delta append cost only with batch size.
+
+        ``df`` is a DataFrame (written by a Spark job) or a
+        ``pyarrow.Table`` already in the current schema (written on the
+        driver, one file per touched bucket). Only the file write differs:
+        add-entries, summary and commit are shared."""
         st = self.state()
         if epoch is not None and epoch in st.epochs:
             return {"skipped": True, "reason": "epoch already committed", "epoch": epoch}
-        dfb = df.select(*st.schema.names()).withColumn(
-            _BUCKET, self._bucket_expr(st.key_col, st.num_buckets)
-        )
-        adds = self._write_files(dfb, st, st.num_buckets, pre_partitioned=pre_partitioned)
+        if isinstance(df, _pa.Table):
+            adds = self._write_arrow_files(df, st)
+        else:
+            dfb = df.select(*st.schema.names()).withColumn(
+                _BUCKET, self._bucket_expr(st.key_col, st.num_buckets)
+            )
+            adds = self._write_files(dfb, st, st.num_buckets, pre_partitioned=pre_partitioned)
         summary = {
             "epoch": epoch,
             "watermark": watermark,

@@ -21,6 +21,18 @@ per-height loop, batched):
 5. **lineage** row (batch id, seq range, affected buckets, snapshot version,
    counts, duration) — T12 observability, idempotently keyed by batch id.
 
+Execution is chosen per batch by its size (*Evolution of a Compiling Query
+Engine*, VLDB 2021: pick the execution mode by the size of the work). A
+batch whose optimizer size estimate is below ``_SMALL_BATCH_BYTES`` runs
+steps 1–4 on the driver in one Arrow pass (``toArrow()`` → the same pure
+quarantine, latest-wins and extraction rules → one pyarrow file per touched
+bucket → the same delta commit), with no Spark job past the read of the
+batch; larger batches run the Spark plan. The fixed cost of a Spark apply
+(exchanges, one task per bucket, the bucketed write) is seconds, so a small
+micro-batch of a tailing stream spends almost all of its time there. Each
+commit records which mode ran as ``exec``. Dead-letter rows land in
+``quarantine/batch=N``: before the commit on the driver, after it on Spark.
+
 Exactly-once: batch boundaries are a pure function of configuration
 (``epochs_per_batch``), the commit is atomic, and the batch id is recorded in
 the commit summary — replaying after any crash skips already-committed
@@ -32,18 +44,32 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cosmwasm_etl_spark.functions.extraction import (
+    check_quarantine_bytes,
     check_quarantine_udf,
+    extract_text_bytes,
+    extractor_for_epoch,
     with_extracted_text,
     with_extracted_text_versioned,
 )
 from cosmwasm_etl_spark.lakehouse import LakeTable
+from cosmwasm_etl_spark.lakehouse.arrow_apply import (
+    arrow_schema,
+    latest_wins,
+    project,
+    resolve_sources,
+)
 from cosmwasm_etl_spark.lakehouse.schema import _parse_type as _parse_lake_type
 from cosmwasm_etl_spark.operators.dedup_window import latest_wins_agg
 from cosmwasm_etl_spark.operators.validation import full_outer_diff
@@ -77,6 +103,12 @@ PAGE_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
 # silently skip on — a regular batch epoch).
 _DEFERRED_BATCH_ID = -1
 _RETRY_EPOCH_BASE = -1000
+
+# A batch whose optimizer size estimate is below this many bytes applies on
+# the driver in one Arrow pass; larger ones run the Spark plan (see
+# CdcPipeline.apply_batch). It sits below the measured crossover, where a
+# batch of 8 KB pages applies equally fast either way (see CHANGES.md).
+_SMALL_BATCH_BYTES = 4 << 20
 
 # UTF-8 encoding of U+FFFD. The literal-replacement-char fast-path check is
 # done at the BYTE level (contains on the binary column): for valid UTF-8 it
@@ -193,17 +225,36 @@ class CdcPipeline:
     def apply_batch(self, events: DataFrame, batch_id: int) -> dict:
         """Apply one micro-batch of change events. Idempotent on batch_id.
 
-        Physical shape: the whole batch streams through ONE job — validity
-        check (Arrow decode pass) → latest-wins aggregate → extraction of
-        winners → bucketed file write — with batch statistics (event count,
-        seq range, quarantine count) collected *during* that job via
-        ``Observation`` metrics. No ``persist()`` of raw html (8 KB/page
-        payloads through the JVM heap cause GC thrash), no second stats
-        pass. The rare quarantine spill re-reads the source slice only when
-        the observed quarantine count is non-zero.
+        Two execution modes, chosen by the size of the batch (a property of
+        the input, never an option): the optimizer's size estimate of the
+        batch's plan — computed from file metadata while planning, so the
+        choice runs no Spark job — below ``_SMALL_BATCH_BYTES`` means
+        ``"driver"``, anything else (or no estimate) means ``"spark"``.
+        Both give the same table rows, dead-letter rows and commit summary;
+        the summary and the returned stats record which one ran as
+        ``exec``.
+
+        - **spark**: the whole batch streams through ONE job — validity
+          check (Arrow decode pass) → latest-wins aggregate → extraction of
+          winners → bucketed file write — with batch statistics (event
+          count, seq range, quarantine count) collected *during* that job
+          via ``Observation`` metrics. No ``persist()`` of raw html, no
+          second stats pass. In ``batch`` quarantine mode the dead-letter
+          rows are captured by a second job AFTER the commit, and only when
+          the observed quarantine count is non-zero.
+        - **driver**: one Arrow pass — ``toArrow()``, the quarantine rule,
+          latest-wins, extraction of winners, projection to the current
+          schema and one pyarrow file per touched bucket — with no Spark
+          job past the read of the batch. In ``batch`` quarantine mode the
+          dead-letter rows are written BEFORE the commit, so a crash after
+          the commit cannot lose them.
+
+        In ``deferred`` quarantine mode both modes leave the dead-letter
+        rows to :meth:`run_replay`'s single pass.
         """
         events = self._normalize(events)
-        if batch_id in self.table.committed_epochs():
+        st = self.table.state()
+        if batch_id in st.epochs:
             stats = {"batch_id": batch_id, "skipped": True}
             if self.post_commit is not None:
                 # replay healing: downstream tasks may have crashed after
@@ -212,6 +263,104 @@ class CdcPipeline:
                 self.post_commit(events, batch_id, stats)
             return stats
         t0 = time.time()
+        exec_mode = self._exec_mode(events, st)
+        if exec_mode == "driver":
+            res, got = self._apply_on_driver(events, batch_id, st)
+        else:
+            res, got = self._apply_with_spark(events, batch_id)
+
+        self._applied_since_compact += 1
+        if self._applied_since_compact >= self.compact_every:
+            self.table.compact(self._resolve_latest)
+            self._applied_since_compact = 0
+
+        stats = {
+            "batch_id": batch_id,
+            "skipped": bool(res.get("skipped")),
+            "exec": exec_mode,
+            "n_events": int(got["n"] or 0),
+            "n_quarantined": int(got["nq"] or 0),
+            "min_seq": int(got["min_seq"]) if got["min_seq"] is not None else None,
+            "max_seq": int(got["max_seq"]) if got["max_seq"] is not None else None,
+            "table_version": res.get("version"),
+            "duration_ms": int((time.time() - t0) * 1000),
+        }
+        self._write_lineage(stats)
+        if self.post_commit is not None:
+            self.post_commit(events, batch_id, stats)
+        return stats
+
+    def _exec_mode(self, events: DataFrame, st) -> str:
+        """``"driver"`` when the batch's optimizer size estimate is below
+        ``_SMALL_BATCH_BYTES`` and every table column has an Arrow type;
+        otherwise ``"spark"``. Reading the estimate plans the query but runs
+        no job (file sources size themselves from file metadata). A plan
+        without an estimate reports ``Long.MaxValue`` — e.g. a
+        ``createDataFrame`` of Python rows — and a filter without CBO
+        reports its whole input, so both take the Spark path."""
+        try:
+            size = int(str(events._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+            arrow_schema(st.schema)
+        except Exception:  # noqa: BLE001 — no estimate means the Spark path
+            return "spark"
+        return "driver" if size < _SMALL_BATCH_BYTES else "spark"
+
+    def _summary(self, got: dict) -> dict:
+        """The batch's counts as the commit summary records them."""
+        return {
+            "watermark": got["max_seq"],
+            "n_events": got["n"],
+            "n_quarantined": got["nq"],
+            "min_seq": got["min_seq"],
+        }
+
+    def _apply_on_driver(self, events: DataFrame, batch_id: int, st) -> tuple[dict, dict]:
+        """The small-batch apply: one Arrow pass on the driver with the
+        engine's own pure rules — ``check_quarantine_bytes`` on every event,
+        latest-wins on (warc_ts, seq) over the valid ones, the extractor
+        (version-dispatched by epoch) on winners only, projection to the
+        current schema by field id, then a delta commit of one pyarrow file
+        per touched bucket. Returns (append result, batch counts)."""
+        tbl = events.toArrow()
+        errs = pa.array(
+            [check_quarantine_bytes(h) for h in tbl.column("html").to_pylist()], pa.string()
+        )
+        bad = pc.is_valid(errs)
+        got = {
+            "n": tbl.num_rows,
+            "max_seq": pc.max(tbl.column("seq")).as_py(),
+            "min_seq": pc.min(tbl.column("seq")).as_py(),
+            "nq": int(pc.sum(bad).as_py() or 0),
+        }
+        if got["nq"] and self.quarantine_mode == "batch":
+            self._write_quarantine_arrow(
+                tbl.filter(bad).append_column("__q_err", errs.filter(bad)), batch_id
+            )
+        winners = latest_wins(tbl.filter(pc.invert(bad)), "url", ["warc_ts", "seq"])
+        htmls = winners.column("html").to_pylist()
+        if self.extract_versions:
+            bounds = tuple(self.extract_versions)
+            epochs = winners.column("epoch").to_pylist()
+            extracted = [extractor_for_epoch(bounds, int(e))(h) for h, e in zip(htmls, epochs)]
+        else:
+            extracted = [extract_text_bytes(h) for h in htmls]
+        # the quarantine pre-check and extraction share one validity rule,
+        # so this filter is defensive, as on the Spark path
+        ok = winners.filter(pa.array([err is None for _t, err in extracted], pa.bool_()))
+        texts = pa.array([t for t, err in extracted if err is None], pa.string())
+        if "text" in ok.column_names:
+            ok = ok.drop_columns(["text"])
+        ok = ok.append_column("text", texts)
+        ok = ok.append_column("deleted", pc.equal(ok.column("op"), "delete"))
+        res = self.table.append_delta(
+            project(ok, st), epoch=batch_id, summary_fn=lambda: self._summary(got),
+            extra_summary={"key_norm": self._key_norm, "exec": "driver"},
+        )
+        return res, got
+
+    def _apply_with_spark(self, events: DataFrame, batch_id: int) -> tuple[dict, dict]:
+        """The Spark plan (see :meth:`apply_batch`). Returns (append result,
+        batch counts)."""
         from pyspark.sql import Observation
 
         # Validity check, JVM-first with a masked python residue: the ratio
@@ -267,35 +416,17 @@ class CdcPipeline:
         ok = extracted.filter(F.col("__extract_err").isNull()).withColumn(
             "deleted", F.col("op") == "delete"
         )
-        # dynamic projection to the CURRENT table schema: evolved columns
-        # come from the event payload when present; a RENAMED column whose
-        # payload still uses the old name follows the field-id lineage
-        # through the historical schema versions (event producers keep
-        # emitting the pre-rename name — dropping those values would lose
-        # data whenever a pre-rename event is applied post-rename, e.g.
-        # out-of-order streaming delivery); NULL only when no name of the
-        # field id ever appears (the read-side half lives in
-        # lakehouse.schema.align_to)
-        tbl_state = self.table.state()
-        cur = tbl_state.schema
-        cols = []
-        for f in cur.fields:
-            src = f.name if f.name in ok.columns else None
-            if src is None:
-                for sv in sorted(tbl_state.schemas, reverse=True):
-                    old = next(
-                        (g.name for g in tbl_state.schemas[sv].fields if g.id == f.id),
-                        None,
-                    )
-                    if old is not None and old in ok.columns:
-                        src = old
-                        break
-            spark_t = _parse_lake_type(f.type)
-            if src is not None:
-                cols.append(F.col(src).cast(spark_t).alias(f.name))
-            else:
-                cols.append(F.lit(None).cast(spark_t).alias(f.name))
-        batch = ok.select(*cols)
+        # dynamic projection to the CURRENT table schema by field id (see
+        # arrow_apply.resolve_sources): a column missing from the payload
+        # under every name of its field id is NULL
+        batch = ok.select(
+            *[
+                (F.col(src) if src is not None else F.lit(None))
+                .cast(_parse_lake_type(f.type))
+                .alias(f.name)
+                for f, src in resolve_sources(self.table.state(), ok.columns)
+            ]
+        )
 
         def _merged_obs() -> dict:
             try:
@@ -317,49 +448,18 @@ class CdcPipeline:
                 "nq": int(got["nq"] or 0),
             }
 
-        def _observed_summary() -> dict:
-            # runs after the sink's write job (metrics available), before
-            # the atomic commit — watermark + counts land IN the commit,
-            # exactly like the reference's single-transaction CAS.
-            got = _merged_obs()
-            return {
-                "watermark": got["max_seq"],
-                "n_events": got["n"],
-                "n_quarantined": got["nq"],
-                "min_seq": got["min_seq"],
-            }
-
+        # the summary runs after the sink's write job (metrics available),
+        # before the atomic commit — watermark + counts land IN the commit,
+        # exactly like the reference's single-transaction CAS.
         res = self.table.append_delta(
-            batch, epoch=batch_id, summary_fn=_observed_summary, pre_partitioned=True,
-            extra_summary={"key_norm": self._key_norm},
+            batch, epoch=batch_id, summary_fn=lambda: self._summary(_merged_obs()),
+            pre_partitioned=True,
+            extra_summary={"key_norm": self._key_norm, "exec": "spark"},
         )
-
         got = _merged_obs()
-        n_events, max_seq = got["n"], got["max_seq"]
-        n_quarantined = int(got["nq"] or 0)
-
-        if n_quarantined and self.quarantine_mode == "batch":
+        if got["nq"] and self.quarantine_mode == "batch":
             self._capture_quarantine(events, batch_id)
-
-        self._applied_since_compact += 1
-        if self._applied_since_compact >= self.compact_every:
-            self.table.compact(self._resolve_latest)
-            self._applied_since_compact = 0
-
-        stats = {
-            "batch_id": batch_id,
-            "skipped": bool(res.get("skipped")),
-            "n_events": int(n_events or 0),
-            "n_quarantined": int(n_quarantined),
-            "min_seq": int(got["min_seq"]) if got["min_seq"] is not None else None,
-            "max_seq": int(max_seq) if max_seq is not None else None,
-            "table_version": res.get("version"),
-            "duration_ms": int((time.time() - t0) * 1000),
-        }
-        self._write_lineage(stats)
-        if self.post_commit is not None:
-            self.post_commit(events, batch_id, stats)
-        return stats
+        return res, got
 
     def _capture_quarantine(self, events: DataFrame, batch_id: int) -> int:
         """Recompute only the dead-letter slice: a JVM-side prefilter (strict
@@ -388,6 +488,23 @@ class CdcPipeline:
         return sum(
             pq.ParquetFile(p).metadata.num_rows for p in glob.glob(os.path.join(path, "*.parquet"))
         )
+
+    def _write_quarantine_arrow(self, bad: pa.Table, batch_id: int) -> None:
+        """Driver-side twin of :meth:`_write_quarantine`: the same columns
+        (``batch_id`` typed as Spark types the literal), the same directory,
+        replaced whole — written to a hidden sibling, then renamed in."""
+        n = bad.num_rows
+        id_type = pa.int32() if -(2**31) <= batch_id < 2**31 else pa.int64()
+        out = bad.select(["seq", "epoch", "op", "url", "warc_ts", "html", "lang", "__q_err"])
+        out = out.rename_columns([*out.column_names[:-1], "err"]).append_column(
+            "batch_id", pa.array([batch_id] * n, id_type)
+        )
+        path = os.path.join(self.quarantine_dir, f"batch={batch_id}")
+        tmp = os.path.join(self.quarantine_dir, f".tmp-{uuid.uuid4().hex}")
+        os.makedirs(tmp)
+        pq.write_table(out, os.path.join(tmp, f"part-{uuid.uuid4().hex}.parquet"))
+        shutil.rmtree(path, ignore_errors=True)
+        os.rename(tmp, path)
 
     def _write_lineage(self, stats: dict) -> None:
         """T12/north-rule lineage: one JSON doc per batch (idempotent by batch

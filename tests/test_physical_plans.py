@@ -95,11 +95,16 @@ def test_simhash_plan_is_pure_jvm(spark, sf_dir):
 def test_apply_write_plan_has_two_exchanges_and_one_scan(spark, tmp_path, monkeypatch):
     """The frame apply_batch hands the sink: exactly two hash exchanges —
     the url dedup (map-side combined) and the bucket placement — no
-    broadcast join, and ONE scan of the batch's log slice."""
+    broadcast join, and ONE scan of the batch's log slice. The slice is
+    small enough for the driver path, so the size gate is pinned to the
+    Spark plan, which is this test's subject."""
     import re
 
     from cosmwasm_etl_spark.lakehouse import LakeTable
+    from cosmwasm_etl_spark.plans import pipeline as pipeline_mod
     from cosmwasm_etl_spark.plans.pipeline import CdcPipeline, create_pages_table
+
+    monkeypatch.setattr(pipeline_mod, "_SMALL_BATCH_BYTES", 0)
     from cosmwasm_etl_spark.sources.eventlog import read_event_log, synthetic_events, write_event_log
 
     ev = synthetic_events(spark, 2_000, n_urls=200, events_per_epoch=500)
