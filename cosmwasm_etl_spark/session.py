@@ -48,6 +48,13 @@ def build_session(
         # pruning (retention) — and Iceberg mandates int64 timestamps anyway
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # LakeTable reads name their parquet files explicitly (from the
+        # commit log), and above this many paths Spark stats them in a
+        # separate listing JOB. On the local filesystem that job costs a
+        # point lookup ~0.3 s once base + delta files for its keys pass 32
+        # (the default); stating 1,024 local files serially takes
+        # milliseconds.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         # Vectorized-reader batch size bounded so wide BINARY cells (8 KB
         # html pages) build ~8 MB value arrays instead of the default
         # 4096-row ~32 MB ones: with an 8 g heap G1 regions are 4 MB, so a
