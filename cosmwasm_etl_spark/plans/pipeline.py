@@ -128,6 +128,16 @@ def _is_ok_fast_expr():
     )
 
 
+def _commit_counts(got: dict) -> dict:
+    """A batch's counts as its delta commit summary records them."""
+    return {
+        "watermark": got["max_seq"],
+        "n_events": got["n"],
+        "n_quarantined": got["nq"],
+        "min_seq": got["min_seq"],
+    }
+
+
 def create_pages_table(spark: SparkSession, path: str, num_buckets: int = 16) -> LakeTable:
     return LakeTable.create(spark, path, PAGES_SCHEMA, key_col="url", ts_col="warc_ts", num_buckets=num_buckets)
 
@@ -267,7 +277,7 @@ class CdcPipeline:
         if exec_mode == "driver":
             res, got = self._apply_on_driver(events, batch_id, st)
         else:
-            res, got = self._apply_with_spark(events, batch_id)
+            res, got = self._apply_with_spark(events, batch_id, st)
 
         self._applied_since_compact += 1
         if self._applied_since_compact >= self.compact_every:
@@ -305,15 +315,6 @@ class CdcPipeline:
             return "spark"
         return "driver" if size < _SMALL_BATCH_BYTES else "spark"
 
-    def _summary(self, got: dict) -> dict:
-        """The batch's counts as the commit summary records them."""
-        return {
-            "watermark": got["max_seq"],
-            "n_events": got["n"],
-            "n_quarantined": got["nq"],
-            "min_seq": got["min_seq"],
-        }
-
     def _apply_on_driver(self, events: DataFrame, batch_id: int, st) -> tuple[dict, dict]:
         """The small-batch apply: one Arrow pass on the driver with the
         engine's own pure rules — ``check_quarantine_bytes`` on every event,
@@ -333,9 +334,7 @@ class CdcPipeline:
             "nq": int(pc.sum(bad).as_py() or 0),
         }
         if got["nq"] and self.quarantine_mode == "batch":
-            self._write_quarantine_arrow(
-                tbl.filter(bad).append_column("__q_err", errs.filter(bad)), batch_id
-            )
+            self._write_quarantine_arrow(tbl.filter(bad), errs.filter(bad), batch_id)
         winners = latest_wins(tbl.filter(pc.invert(bad)), "url", ["warc_ts", "seq"])
         htmls = winners.column("html").to_pylist()
         if self.extract_versions:
@@ -353,12 +352,12 @@ class CdcPipeline:
         ok = ok.append_column("text", texts)
         ok = ok.append_column("deleted", pc.equal(ok.column("op"), "delete"))
         res = self.table.append_delta(
-            project(ok, st), epoch=batch_id, summary_fn=lambda: self._summary(got),
+            project(ok, st), epoch=batch_id, summary_fn=lambda: _commit_counts(got),
             extra_summary={"key_norm": self._key_norm, "exec": "driver"},
         )
         return res, got
 
-    def _apply_with_spark(self, events: DataFrame, batch_id: int) -> tuple[dict, dict]:
+    def _apply_with_spark(self, events: DataFrame, batch_id: int, st) -> tuple[dict, dict]:
         """The Spark plan (see :meth:`apply_batch`). Returns (append result,
         batch counts)."""
         from pyspark.sql import Observation
@@ -394,7 +393,7 @@ class CdcPipeline:
             F.count("__q_err").alias("nq"),
         )
         valid = ev.filter(F.col("__q_err").isNull()).drop("__q_err")
-        n_buckets = self.table.state().num_buckets
+        n_buckets = st.num_buckets
         # Winner selection + bucket placement: a dedup exchange on url
         # (map-side combined, so a hot url ships at most one row per map
         # task), then a second exchange placing winners by bucket.
@@ -424,7 +423,7 @@ class CdcPipeline:
                 (F.col(src) if src is not None else F.lit(None))
                 .cast(_parse_lake_type(f.type))
                 .alias(f.name)
-                for f, src in resolve_sources(self.table.state(), ok.columns)
+                for f, src in resolve_sources(st, ok.columns)
             ]
         )
 
@@ -452,7 +451,7 @@ class CdcPipeline:
         # before the atomic commit — watermark + counts land IN the commit,
         # exactly like the reference's single-transaction CAS.
         res = self.table.append_delta(
-            batch, epoch=batch_id, summary_fn=lambda: self._summary(_merged_obs()),
+            batch, epoch=batch_id, summary_fn=lambda: _commit_counts(_merged_obs()),
             pre_partitioned=True,
             extra_summary={"key_norm": self._key_norm, "exec": "spark"},
         )
@@ -489,15 +488,15 @@ class CdcPipeline:
             pq.ParquetFile(p).metadata.num_rows for p in glob.glob(os.path.join(path, "*.parquet"))
         )
 
-    def _write_quarantine_arrow(self, bad: pa.Table, batch_id: int) -> None:
+    def _write_quarantine_arrow(self, bad: pa.Table, errs: pa.Array, batch_id: int) -> None:
         """Driver-side twin of :meth:`_write_quarantine`: the same columns
         (``batch_id`` typed as Spark types the literal), the same directory,
         replaced whole — written to a hidden sibling, then renamed in."""
-        n = bad.num_rows
         id_type = pa.int32() if -(2**31) <= batch_id < 2**31 else pa.int64()
-        out = bad.select(["seq", "epoch", "op", "url", "warc_ts", "html", "lang", "__q_err"])
-        out = out.rename_columns([*out.column_names[:-1], "err"]).append_column(
-            "batch_id", pa.array([batch_id] * n, id_type)
+        out = (
+            bad.select(["seq", "epoch", "op", "url", "warc_ts", "html", "lang"])
+            .append_column("err", errs)
+            .append_column("batch_id", pa.array([batch_id] * bad.num_rows, id_type))
         )
         path = os.path.join(self.quarantine_dir, f"batch={batch_id}")
         tmp = os.path.join(self.quarantine_dir, f".tmp-{uuid.uuid4().hex}")

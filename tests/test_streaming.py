@@ -42,10 +42,12 @@ def test_stream_available_now_matches_oracle(spark, tmp_path):
 def test_stream_available_now_timeout_stops_and_raises(spark, tmp_path, timeout_sec):
     """A catch-up that cannot drain the log within its timeout must raise
     and stop its query — not return partial stats as if it had finished
-    and leave the query running. A restart then drains the rest."""
+    and leave the query running. A restart then drains the rest. The log
+    is 40 files, one per trigger: small batches apply on the driver in
+    about 0.1 s, so the catch-up must span more triggers than fit in 1 s."""
     events = synthetic_events(spark, 2_000, n_urls=200, events_per_epoch=500)
     log_dir = str(tmp_path / "events")
-    write_event_log(events, log_dir, range_partitions=4)
+    write_event_log(events, log_dir, range_partitions=40)
     table = create_pages_table(spark, str(tmp_path / "pages"), num_buckets=4)
     pipe = CdcPipeline(spark, table, str(tmp_path / "work"))
     ckpt = str(tmp_path / "ckpt")
