@@ -493,11 +493,14 @@ class LakeTable:
             out_dir = os.path.join(stage_abs, f"{_BUCKET}={bucket}")
             os.makedirs(out_dir)
             _pq.write_table(part, os.path.join(out_dir, f"part-{uuid.uuid4().hex}.parquet"))
-        return self._add_entries(stage_abs, st)
+        # footers of a few tiny files just written: reading them in this
+        # thread takes ~1 ms, starting a pool per batch several ms more
+        return self._add_entries(stage_abs, st, pool=False)
 
-    def _add_entries(self, stage_abs: str, st: TableState) -> list[dict]:
+    def _add_entries(self, stage_abs: str, st: TableState, pool: bool = True) -> list[dict]:
         """Add-entries (footer stats, no data read) for every non-empty
-        parquet file under a ``__bucket=b`` directory of ``stage_abs``."""
+        parquet file under a ``__bucket=b`` directory of ``stage_abs``;
+        footers are read by a thread pool unless ``pool`` is false."""
         entries: list[dict] = []
         todo: list[tuple[str, int]] = []
         for dirpath, _dirs, names in os.walk(stage_abs):
@@ -509,8 +512,11 @@ class LakeTable:
                 if n.endswith(".parquet"):
                     todo.append((os.path.join(dirpath, n), bucket))
         key_col, ts_col = st.key_col, st.ts_col
-        with _fut.ThreadPoolExecutor(max_workers=16) as ex:
-            stats = list(ex.map(lambda t: _file_stats(t[0], key_col, ts_col), todo))
+        if pool:
+            with _fut.ThreadPoolExecutor(max_workers=16) as ex:
+                stats = list(ex.map(lambda t: _file_stats(t[0], key_col, ts_col), todo))
+        else:
+            stats = [_file_stats(p, key_col, ts_col) for p, _b in todo]
         for (abs_p, bucket), (rows, size, mn, mx, t_mn, t_mx) in zip(todo, stats):
             if rows == 0:
                 continue
