@@ -38,6 +38,9 @@ from cosmwasm_etl_spark.lakehouse.log import CHECKPOINT_INTERVAL, TableLog
 from cosmwasm_etl_spark.lakehouse.schema import TableSchema, align_to, evolve
 
 _BUCKET = "__bucket"
+# TableState facts folded from commit summaries (None = unknown, from an older
+# checkpoint): sum of n_events, lowest min_seq, delta commits since compaction
+_FOLDED = ("applied_events", "min_seq", "delta_commits")
 
 
 class TableState:
@@ -57,6 +60,9 @@ class TableState:
         # with the other normalization would silently re-key already-
         # committed rows, so mismatches are refused at pipeline init.
         self.key_norm: str = ""
+        self.applied_events: int | None = 0
+        self.min_seq: int | None = None
+        self.delta_commits: int | None = 0
 
     def to_dict(self) -> dict:
         return {
@@ -71,6 +77,7 @@ class TableState:
             "num_buckets": self.num_buckets,
             "delta_files": sorted(self.delta_files),
             "key_norm": self.key_norm,
+            **{k: getattr(self, k) for k in _FOLDED},
         }
 
     @classmethod
@@ -87,6 +94,8 @@ class TableState:
         st.num_buckets = d["num_buckets"]
         st.delta_files = set(d.get("delta_files", []))
         st.key_norm = d.get("key_norm", "")
+        for k in _FOLDED:
+            setattr(st, k, d.get(k))
         return st
 
 
@@ -263,6 +272,10 @@ class LakeTable:
                 st.files[e["path"]] = e
             if c["operation"] == "delta":
                 st.delta_files.update(e["path"] for e in c.get("add", []))
+                if st.delta_commits is not None:
+                    st.delta_commits += 1
+            elif c["operation"] == "compact":
+                st.delta_commits = 0
             summ = c.get("summary", {})
             if summ.get("epoch") is not None:
                 st.epochs.add(int(summ["epoch"]))
@@ -270,6 +283,10 @@ class LakeTable:
                 st.watermark = max(st.watermark, int(summ["watermark"]))
             if summ.get("key_norm"):
                 st.key_norm = summ["key_norm"]
+            if summ.get("n_events") is not None and st.applied_events is not None:
+                st.applied_events += int(summ["n_events"])
+                seqs = [s for s in (st.min_seq, summ.get("min_seq")) if s is not None]
+                st.min_seq = min(seqs, default=None)
         return st
 
     def committed_epochs(self) -> set[int]:
@@ -292,9 +309,12 @@ class LakeTable:
         ``buckets`` maps bucket -> {files, rows, bytes}; ``skew`` is
         max-bucket-rows / mean-bucket-rows over non-empty buckets (1.0 =
         perfectly even) — the first thing to check when one task lags a
-        100×-scale MERGE. ``delta`` counts un-compacted MOR files (compaction
-        debt); rows in MOR mode count every live base+delta row, so they
-        upper-bound (not equal) the resolved key count."""
+        100×-scale MERGE. ``delta`` counts un-compacted MOR files, rows and
+        commits (compaction debt); rows in MOR mode count every live
+        base+delta row, so they upper-bound (not equal) the resolved key
+        count. ``min_seq``, ``watermark`` and ``applied_events`` describe the
+        applied prefix of the change log that the pipeline's prefix audit
+        covers (None when unknown)."""
         st = self.state(version)
         buckets: dict[int, dict] = {}
         total_rows = total_bytes = 0
@@ -319,11 +339,13 @@ class LakeTable:
             "num_buckets": st.num_buckets,
             "key_norm": st.key_norm,
             "watermark": st.watermark,
+            "applied_events": st.applied_events,
+            "min_seq": st.min_seq,
             "epochs": len(st.epochs),
             "files": len(st.files),
             "rows": total_rows,
             "bytes": total_bytes,
-            "delta": {"files": delta_files, "rows": delta_rows},
+            "delta": {"files": delta_files, "rows": delta_rows, "commits": st.delta_commits},
             "buckets": buckets,
             "skew": round(skew, 3),
         }

@@ -16,10 +16,10 @@ per-height loop, batched):
    carrying the batch id + high-watermark — the analog of the reference's
    single-Postgres-transaction insert + synced-height CAS
    (`parser/dex/repo/repository.go:98-122`); reads resolve latest-wins
-   across base and delta rows, and every ``compact_every`` batches a
-   compaction folds the deltas into base;
-5. **lineage** row (batch id, seq range, affected buckets, snapshot version,
-   counts, duration) — T12 observability, idempotently keyed by batch id.
+   across base and delta rows, and once ``compact_every`` delta commits
+   have accumulated a compaction folds the deltas into base;
+5. **lineage** is that commit's summary (batch id, seq range, counts, apply
+   time) — T12 observability; the commit log is the pipeline's only record.
 
 Execution is chosen per batch by its size (*Evolution of a Compiling Query
 Engine*, VLDB 2021: pick the execution mode by the size of the work). A
@@ -42,7 +42,6 @@ tests/test_replay.py).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import time
@@ -128,14 +127,23 @@ def _is_ok_fast_expr():
     )
 
 
-def _commit_counts(got: dict) -> dict:
-    """A batch's counts as its delta commit summary records them."""
+def _commit_counts(got: dict, t0: float) -> dict:
+    """A batch's counts and apply time since ``t0``, as its commit records them."""
     return {
         "watermark": got["max_seq"],
         "n_events": got["n"],
         "n_quarantined": got["nq"],
         "min_seq": got["min_seq"],
+        "apply_ms": int((time.time() - t0) * 1000),
     }
+
+
+def _page_names(st) -> dict[str, str]:
+    """The current name of each ``PAGE_COLUMNS`` field, keyed by its name in
+    the schema the table was created with (renames keep the field id)."""
+    current = {f.id: f.name for f in st.schema.fields}
+    first = st.schemas[min(st.schemas)]
+    return {f.name: current[f.id] for f in first.fields if f.name in PAGE_COLUMNS}
 
 
 def create_pages_table(spark: SparkSession, path: str, num_buckets: int = 16) -> LakeTable:
@@ -158,20 +166,17 @@ class CdcPipeline:
     ):
         """The pages table has one sink: every batch appends delta files
         (O(batch) ingest cost), reads resolve latest-wins across base and
-        delta rows, and every ``compact_every`` applied batches a compaction
-        folds the deltas into base."""
+        delta rows, and every ``compact_every`` delta commits (counted in the
+        log) a compaction folds them into base; ``work_dir`` holds dead letters."""
         self.spark = spark
         self.table = table
         self.work_dir = os.path.abspath(work_dir)
         self.quarantine_dir = os.path.join(self.work_dir, "quarantine")
-        self.lineage_dir = os.path.join(self.work_dir, "lineage")
         os.makedirs(self.quarantine_dir, exist_ok=True)
-        os.makedirs(self.lineage_dir, exist_ok=True)
         # The keyword survives only for callers that still pass "mor".
         if sink_mode != "mor":
             raise ValueError(f"unknown sink_mode: {sink_mode} (only 'mor' is supported)")
         self.compact_every = compact_every
-        self._applied_since_compact = 0
         # M5 version dispatch: [(from_epoch, extractor_version), ...]
         self.extract_versions = sorted(extract_versions) if extract_versions else None
         if quarantine_mode not in ("batch", "deferred"):
@@ -275,14 +280,13 @@ class CdcPipeline:
         t0 = time.time()
         exec_mode = self._exec_mode(events, st)
         if exec_mode == "driver":
-            res, got = self._apply_on_driver(events, batch_id, st)
+            res, got = self._apply_on_driver(events, batch_id, st, t0)
         else:
-            res, got = self._apply_with_spark(events, batch_id, st)
+            res, got = self._apply_with_spark(events, batch_id, st, t0)
 
-        self._applied_since_compact += 1
-        if self._applied_since_compact >= self.compact_every:
+        # an unknown count (a checkpoint older than the count) compacts now
+        if st.delta_commits is None or st.delta_commits + 1 >= self.compact_every:
             self.table.compact(self._resolve_latest)
-            self._applied_since_compact = 0
 
         stats = {
             "batch_id": batch_id,
@@ -295,7 +299,6 @@ class CdcPipeline:
             "table_version": res.get("version"),
             "duration_ms": int((time.time() - t0) * 1000),
         }
-        self._write_lineage(stats)
         if self.post_commit is not None:
             self.post_commit(events, batch_id, stats)
         return stats
@@ -315,7 +318,7 @@ class CdcPipeline:
             return "spark"
         return "driver" if size < _SMALL_BATCH_BYTES else "spark"
 
-    def _apply_on_driver(self, events: DataFrame, batch_id: int, st) -> tuple[dict, dict]:
+    def _apply_on_driver(self, events: DataFrame, batch_id: int, st, t0: float) -> tuple[dict, dict]:
         """The small-batch apply: one Arrow pass on the driver with the
         engine's own pure rules — ``check_quarantine_bytes`` on every event,
         latest-wins on (warc_ts, seq) over the valid ones, the extractor
@@ -352,12 +355,12 @@ class CdcPipeline:
         ok = ok.append_column("text", texts)
         ok = ok.append_column("deleted", pc.equal(ok.column("op"), "delete"))
         res = self.table.append_delta(
-            project(ok, st), epoch=batch_id, summary_fn=lambda: _commit_counts(got),
+            project(ok, st), epoch=batch_id, summary_fn=lambda: _commit_counts(got, t0),
             extra_summary={"key_norm": self._key_norm, "exec": "driver"},
         )
         return res, got
 
-    def _apply_with_spark(self, events: DataFrame, batch_id: int, st) -> tuple[dict, dict]:
+    def _apply_with_spark(self, events: DataFrame, batch_id: int, st, t0: float) -> tuple[dict, dict]:
         """The Spark plan (see :meth:`apply_batch`). Returns (append result,
         batch counts)."""
         from pyspark.sql import Observation
@@ -451,7 +454,7 @@ class CdcPipeline:
         # before the atomic commit — watermark + counts land IN the commit,
         # exactly like the reference's single-transaction CAS.
         res = self.table.append_delta(
-            batch, epoch=batch_id, summary_fn=lambda: _commit_counts(_merged_obs()),
+            batch, epoch=batch_id, summary_fn=lambda: _commit_counts(_merged_obs(), t0),
             pre_partitioned=True,
             extra_summary={"key_norm": self._key_norm, "exec": "spark"},
         )
@@ -505,22 +508,16 @@ class CdcPipeline:
         shutil.rmtree(path, ignore_errors=True)
         os.rename(tmp, path)
 
-    def _write_lineage(self, stats: dict) -> None:
-        """T12/north-rule lineage: one JSON doc per batch (idempotent by batch
-        id), carrying offsets (seq range), commit snapshot version, counts,
-        and timing. Affected buckets live in the commit summary itself."""
-        path = os.path.join(self.lineage_dir, f"batch-{stats['batch_id']}.json")
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({**stats, "wall_ts": time.time()}, f)
-        os.replace(tmp, path)
-
     def lineage(self) -> list[dict]:
-        out = []
-        for name in sorted(os.listdir(self.lineage_dir)):
-            if name.endswith(".json"):
-                with open(os.path.join(self.lineage_dir, name)) as f:
-                    out.append(json.load(f))
+        """T12 lineage: one row per retained ``delta`` commit that carries
+        ``n_events`` (an applied batch); ``max_seq`` is its watermark."""
+        keep = ("min_seq", "n_events", "n_quarantined", "affected_buckets", "exec", "ts", "apply_ms")
+        out = [
+            {"batch_id": s["epoch"], "table_version": h["version"], "max_seq": s.get("watermark"),
+             **{k: s.get(k) for k in keep}}
+            for h in self.table.history()
+            if h["operation"] == "delta" and (s := h["summary"]).get("n_events") is not None
+        ]
         return sorted(out, key=lambda d: d["batch_id"])
 
     # ------------------------------------------------------------ batch replay
@@ -635,9 +632,6 @@ class CdcPipeline:
         out_cols = [c for c in df.columns if c != "deleted"]
         return df.filter(~F.col("deleted")).select(*out_cols)
 
-    # alias kept for clarity in evolution tests
-    pages_evolved = pages
-
     def pages_for(
         self,
         urls: DataFrame,
@@ -686,7 +680,6 @@ class CdcPipeline:
         each key has one row, so dropping its tombstone removes the key."""
         if self.table.state().delta_files:
             self.table.compact(self._resolve_latest)
-            self._applied_since_compact = 0
         return self.table.delete_where(
             f"deleted AND warc_ts < timestamp'{older_than_ts}'",
             epoch=epoch,
@@ -711,18 +704,28 @@ class CdcPipeline:
         ).drop("__q_err")
         winners = self._resolve_latest(valid)
         alive = winners.filter(F.col("op") != "delete")
-        return with_extracted_text(alive).filter(F.col("__extract_err").isNull()).select(
-            "url", "warc_ts", "html", "text", "lang"
+        if self.extract_versions:
+            extracted = with_extracted_text_versioned(alive, self.extract_versions)
+        else:
+            extracted = with_extracted_text(alive)
+        # the page columns under their current names, by field id, as the
+        # apply projects them
+        st = self.table.state()
+        src = {f.name: s for f, s in resolve_sources(st, extracted.columns)}
+        return extracted.filter(F.col("__extract_err").isNull()).select(
+            *[n if src[n] == n else F.col(src[n]).alias(n) for n in _page_names(st).values()]
         )
 
     def audit(self, events: DataFrame) -> DataFrame:
         """Replay-equivalence audit: full recompute vs current table state;
-        empty result ⇔ equivalent (the T9 validation-worker analog)."""
+        empty result ⇔ equivalent (the T9 validation-worker analog). Compares
+        ``warc_ts``, ``text`` and ``lang`` under their current names."""
+        names = _page_names(self.table.state())
         return full_outer_diff(
             self.expected_state(events),
             self.pages(),
             keys=["url"],
-            compare_cols=["warc_ts", "text", "lang"],
+            compare_cols=[names[c] for c in ("warc_ts", "text", "lang")],
         )
 
     def audit_log_prefix(self, events: DataFrame) -> DataFrame | None:
@@ -732,24 +735,18 @@ class CdcPipeline:
         divergence (`parser/dex/dex.go:381-518` runs its validation off a
         cursor the same way).
 
-        The file source can deliver files out of seq order during catch-up,
-        so the applied set may have HOLES the per-batch [min_seq, max_seq]
-        lineage cannot see (a batch's own files may be non-adjacent ranges);
-        gap detection is therefore exact-by-counting: the audit only runs
-        when the number of applied events equals the log's event count over
-        [min applied seq, max applied seq] — one pushdown-friendly count.
-        Returns None when holes exist (the caller reports a skipped audit)."""
-        lin = [
-            s for s in self.lineage()
-            if not s.get("skipped") and s.get("min_seq") is not None
-        ]
-        if not lin:
+        The applied prefix is the table state's [min_seq, watermark], folded
+        from the commit log. The file source can deliver files out of seq
+        order during catch-up, so the applied set may have HOLES that range
+        cannot see; gap detection is therefore exact-by-counting: the audit
+        only runs when the log's event count over that range equals the
+        state's ``applied_events`` — one pushdown-friendly count. Returns
+        None when holes exist or the state cannot tell (a skipped audit)."""
+        st = self.table.state()
+        if st.applied_events is None or st.min_seq is None:
             return None
-        lo = min(int(s["min_seq"]) for s in lin)
-        hi = max(int(s["max_seq"]) for s in lin)
-        applied_n = sum(int(s["n_events"] or 0) for s in lin)
-        span = events.filter((F.col("seq") >= lo) & (F.col("seq") <= hi))
-        if span.count() != applied_n:
+        span = events.filter(F.col("seq").between(st.min_seq, st.watermark))
+        if span.count() != st.applied_events:
             return None
         return self.audit(span)
 

@@ -24,8 +24,8 @@ Modes:
                     failure — the reference's ErrNoNewHeight contract).
 
 Every knob maps to a documented pipeline/table parameter; the job prints
-one JSON line of summary stats at the end (per-batch lineage is written
-continuously under ``--work``).
+one JSON line of summary stats at the end (per-batch lineage is each batch's
+commit summary in the table's log; ``LakeTable.history``).
 """
 
 from __future__ import annotations
@@ -49,7 +49,7 @@ def main() -> int:
                          "to <work>/warc_skip_summary.json; fail: abort on the "
                          "first malformed record")
     ap.add_argument("--table", required=True, help="lakehouse pages table path")
-    ap.add_argument("--work", required=True, help="work dir (lineage, quarantine)")
+    ap.add_argument("--work", required=True, help="work dir (dead-letter quarantine)")
     ap.add_argument("--mode", choices=["replay", "available-now", "stream"], default="replay")
     ap.add_argument("--epochs-per-batch", type=int, default=10)
     ap.add_argument("--num-buckets", type=int, default=4096,

@@ -7,7 +7,10 @@ point at a live table during ingest:
     python scripts/table_health.py /lake/pages [--version N] [--buckets]
 
 ``--buckets`` includes the full per-bucket map (files/rows/bytes each);
-without it only the aggregate counters and the skew ratio print.
+without it only the aggregate counters and the skew ratio print. Among
+them: the applied prefix of the change log that the pipeline's prefix
+audit covers (``min_seq``, ``watermark``, ``applied_events``) and the
+compaction debt (``delta``: files, rows and commits since compaction).
 Reference analog: the aggregator's health/count queries
 (`aggregator/repo/repository.go`).
 """

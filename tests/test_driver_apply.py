@@ -82,8 +82,8 @@ def _rows(df, key):
 
 
 def assert_same(pipes, events=None):
-    """Same pages, dead-letter rows and delta summaries (apart from ``ts``
-    and ``exec``); and, given the events, both audit clean."""
+    """Same pages, dead-letter rows and delta summaries (apart from ``ts``,
+    ``apply_ms`` and ``exec``); and, given the events, both audit clean."""
     spark_p, driver_p = pipes["spark"], pipes["driver"]
     assert _rows(driver_p.pages(), "url") == _rows(spark_p.pages(), "url")
     if events is not None:
@@ -97,6 +97,7 @@ def assert_same(pipes, events=None):
             if h["operation"] == "delta":
                 summ = dict(h["summary"])
                 summ.pop("ts")
+                summ.pop("apply_ms")
                 out.append((summ.pop("exec"), summ))
         return out
 
@@ -137,8 +138,7 @@ def test_driver_and_spark_apply_agree_extract_versions(spark, tmp_path, monkeypa
     rows = [ev(i, i % 4, "insert", f"u/{i % 5}", i, page + str(i).encode()) for i in range(16)]
     events = spark.createDataFrame(rows, EVENT_SCHEMA)
     pipes = replay_both(spark, tmp_path, monkeypatch, events, extract_versions=[(0, 1), (2, 2)])
-    # audit() extracts every page with version 1, so it cannot check this
-    assert_same(pipes)
+    assert_same(pipes, events)
     # epochs 2 and 3 extract with v2, which strips <noscript> blocks
     texts = {r.seq: r.text for r in pipes["driver"].pages().collect()}
     assert texts == {
@@ -161,8 +161,7 @@ def test_driver_and_spark_apply_agree_evolved_schema(spark, tmp_path, monkeypatc
         rows.append(ev(i, epoch, "insert", f"u/{i % 6}", i, lang=f"l{i}", fetch_status=status))
     events = spark.createDataFrame(rows, EVENT_SCHEMA + ", fetch_status int")
     pipes = replay_both(spark, tmp_path, monkeypatch, events, evolutions=evolutions)
-    # audit() compares a column named `lang`, which the rename removed
-    assert_same(pipes)
+    assert_same(pipes, events)
     got = {r.url: (r.language, r.fetch_status) for r in pipes["driver"].pages().collect()}
     # urls last written at epoch 2 keep the payload's old-name column
     assert got["u/2"] == ("l8", 208)

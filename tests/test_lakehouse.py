@@ -564,10 +564,57 @@ def test_describe_metadata_only(spark, table):
     assert d["rows"] == 20 and d["files"] == len(table.state().files)
     assert d["key_col"] == "url" and d["num_buckets"] == 8
     assert sum(b["rows"] for b in d["buckets"].values()) == 20
-    assert d["skew"] >= 1.0 and d["delta"] == {"files": 0, "rows": 0}
+    assert d["skew"] >= 1.0 and d["delta"] == {"files": 0, "rows": 0, "commits": 0}
     assert d["epochs"] == 1
-    # MOR deltas show up as compaction debt
-    table.append_delta(spark.createDataFrame([page("u0", 99, "v2")], SCHEMA), epoch=1)
+    assert (d["applied_events"], d["min_seq"]) == (0, None)
+    # MOR deltas show up as compaction debt; a pipeline's commit counts as
+    # the applied prefix of the change log
+    table.append_delta(
+        spark.createDataFrame([page("u0", 99, "v2")], SCHEMA), epoch=1,
+        summary_fn=lambda: {"n_events": 3, "min_seq": 7, "watermark": 9},
+    )
     d2 = table.describe()
     assert d2["delta"]["files"] >= 1 and d2["delta"]["rows"] == 1
+    assert d2["delta"]["commits"] == 1
+    assert (d2["applied_events"], d2["min_seq"], d2["watermark"]) == (3, 7, 9)
     assert d2["rows"] == 21  # MOR rows upper-bound the resolved count
+    # compaction pays the debt off; the applied prefix stays
+    table.compact(lambda df: df)
+    d3 = table.describe()
+    assert d3["delta"] == {"files": 0, "rows": 0, "commits": 0}
+    assert (d3["applied_events"], d3["min_seq"]) == (3, 7)
+
+
+def test_folded_facts_ride_checkpoints(table):
+    """applied_events, min_seq and delta_commits survive a checkpoint; one
+    written before they were folded loads them as unknown (None), and only
+    a compaction makes the delta count known again."""
+    import pyarrow as pa
+
+    def commit(epoch, n, lo):
+        rows = pa.table({
+            "url": [f"u{epoch}"], "warc_ts": [ts(epoch)], "html": [b"t"],
+            "text": ["t"], "lang": ["en"],
+        })
+        table.append_delta(
+            rows, epoch=epoch,
+            summary_fn=lambda: {"n_events": n, "min_seq": lo, "watermark": lo + n - 1},
+        )
+
+    def facts():
+        st = table.state()
+        return st.applied_events, st.min_seq, st.delta_commits
+
+    commit(0, 3, 7)
+    commit(1, 2, 5)
+    st = table.state()
+    table.log.write_checkpoint(st.version, st.to_dict())
+    assert facts() == (5, 5, 2)
+    folded = ("applied_events", "min_seq", "delta_commits")
+    legacy = {k: v for k, v in st.to_dict().items() if k not in folded}
+    table.log.write_checkpoint(st.version, legacy)
+    assert facts() == (None, None, None)
+    commit(2, 4, 0)
+    assert facts() == (None, None, None)
+    table.compact(lambda df: df)
+    assert facts() == (None, None, 0)

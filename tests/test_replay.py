@@ -225,12 +225,14 @@ def test_quarantine_torn_compaction_heals(spark, tmp_path, events_df):
 def test_lineage_emitted_per_batch(spark, tmp_path, events_df):
     pipe = make_pipeline(spark, tmp_path)
     stats = pipe.run_replay(events_df, epochs_per_batch=EPB)
+    applied = [s for s in stats if not s.get("skipped")]
     lin = pipe.lineage()
-    assert len(lin) == len([s for s in stats if not s.get("skipped")])
-    for row in lin:
+    assert [r["batch_id"] for r in lin] == [s["batch_id"] for s in applied]
+    for row, s in zip(lin, applied):
+        assert row["table_version"] == s["table_version"]
         assert row["max_seq"] >= row["min_seq"]
-        assert row["table_version"] is not None
         assert row["n_events"] > 0
+        assert row["apply_ms"] >= 0
     # delta commit summaries carry affected buckets + watermark
     # (per-partition lineage), matching the buckets of the files they add
     log = pipe.table.log
@@ -243,6 +245,89 @@ def test_lineage_emitted_per_batch(spark, tmp_path, events_df):
         assert c["summary"]["watermark"] is not None
         assert c["summary"]["affected_buckets"] == sorted({e["bucket"] for e in c["add"]})
     assert any(c["summary"]["affected_buckets"] for c in deltas)
+
+
+def _batches(events_df, epb=EPB):
+    """The replay's batches as (batch_id, slice), in order."""
+    bounds = events_df.agg(F.min("epoch"), F.max("epoch")).collect()[0]
+    return [
+        (b, events_df.filter((F.col("epoch") >= b * epb) & (F.col("epoch") < (b + 1) * epb)))
+        for b in range(int(bounds[0]) // epb, int(bounds[1]) // epb + 1)
+    ]
+
+
+@pytest.mark.parametrize("which", ["middle", "last"])
+def test_prefix_audit_survives_crash_after_commit(spark, tmp_path, monkeypatch, events_df, which):
+    """A process that dies right after batch k's commit, then is replaced by
+    a pipeline with another work dir that replays the log, still audits the
+    applied prefix clean: the audit's coverage is read from the table's
+    commit log, which the crash cannot lose."""
+    from cosmwasm_etl_spark.lakehouse import LakeTable
+
+    batches = _batches(events_df)
+    k = len(batches) // 2 if which == "middle" else len(batches) - 1
+    pipe = make_pipeline(spark, tmp_path)
+    for b, chunk in batches[:k]:
+        pipe.apply_batch(chunk, b)
+    append_delta = LakeTable.append_delta
+
+    def append_then_die(self, *a, **kw):
+        append_delta(self, *a, **kw)
+        raise RuntimeError("process died after the commit")
+
+    monkeypatch.setattr(LakeTable, "append_delta", append_then_die)
+    with pytest.raises(RuntimeError, match="died"):
+        pipe.apply_batch(batches[k][1], batches[k][0])
+    monkeypatch.setattr(LakeTable, "append_delta", append_delta)
+
+    pipe2 = CdcPipeline(spark, LakeTable.load(spark, pipe.table.path), str(tmp_path / "work2"))
+    stats = pipe2.run_replay(events_df, epochs_per_batch=EPB)
+    assert sum(1 for s in stats if s.get("skipped")) == k + 1
+    diff = pipe2.audit_log_prefix(events_df)
+    assert diff is not None
+    assert diff.count() == 0
+
+
+def test_reopened_pipeline_still_compacts(spark, tmp_path, events_df):
+    """A scheduler that opens a new pipeline every 3 batches (one
+    available-now job per run) still compacts every compact_every delta
+    commits: the count is read from the commit log, not kept in-process."""
+    batches = _batches(events_df, epb=1)[:12]
+    table = create_pages_table(spark, str(tmp_path / "pages"), num_buckets=8)
+    most = 0
+    for run in range(0, 12, 3):
+        pipe = CdcPipeline(spark, table, str(tmp_path / f"work{run}"), compact_every=8)
+        for b, chunk in batches[run:run + 3]:
+            pipe.apply_batch(chunk, b)
+            most = max(most, len(table.state().delta_files))
+    assert "compact" in [h["operation"] for h in table.history()]
+    # at most compact_every - 1 delta commits stay live, one file per bucket each
+    assert most <= 7 * table.state().num_buckets
+    applied = events_df.filter(F.col("epoch") <= batches[-1][0])
+    assert pipe.audit(applied).count() == 0
+
+
+def test_prefix_audit_after_vacuum(spark, tmp_path, events_df):
+    """Vacuum drops the early commits; the prefix audit still covers them,
+    because the applied prefix is folded into the checkpoint at the
+    horizon."""
+    pipe = make_pipeline(spark, tmp_path)
+    pipe.run_replay(events_df, epochs_per_batch=EPB)
+    pipe.table.vacuum(retain_versions=2)
+    assert pipe.table.log.min_version() > 2
+    assert len(pipe.lineage()) < 3
+    diff = pipe.audit_log_prefix(events_df)
+    assert diff is not None
+    assert diff.count() == 0
+    # a horizon checkpoint written before the prefix was folded cannot tell
+    # it: the audit is skipped, never run over a wrong prefix
+    log = pipe.table.log
+    horizon = log.min_version()
+    legacy = log.read_checkpoint(horizon)
+    for k in ("applied_events", "min_seq", "delta_commits"):
+        legacy.pop(k)
+    log.write_checkpoint(horizon, legacy)
+    assert pipe.audit_log_prefix(events_df) is None
 
 
 @pytest.mark.parametrize("salt_buckets", [None, 8])

@@ -43,7 +43,7 @@ def test_evolution_applied_at_same_boundary_on_replay(spark, tmp_path):
     assert "language" in cols and "lang" not in cols
 
     # rows whose final version predates the column have NULL; later ones carry it
-    pages = pipe.pages_evolved()
+    pages = pipe.pages()
     with_status = pages.filter(F.col("fetch_status").isNotNull())
     without = pages.filter(F.col("fetch_status").isNull())
     assert with_status.count() > 0 and without.count() > 0

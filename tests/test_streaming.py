@@ -190,8 +190,8 @@ def test_stream_schema_evolution_mid_stream(spark, tmp_path):
     table2 = create_pages_table(spark, str(tmp_path / "pages2"), num_buckets=8)
     pipe2 = CdcPipeline(spark, table2, str(tmp_path / "work2"))
     pipe2.run_replay(ev, epochs_per_batch=2, schema_evolutions=EVOLUTIONS)
-    a = pipe.pages_evolved().select("url", "warc_ts", "text", "language", "fetch_status")
-    b = pipe2.pages_evolved().select("url", "warc_ts", "text", "language", "fetch_status")
+    a = pipe.pages().select("url", "warc_ts", "text", "language", "fetch_status")
+    b = pipe2.pages().select("url", "warc_ts", "text", "language", "fetch_status")
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
     # restart with the same checkpoint + evolutions: nothing re-applies
@@ -323,8 +323,8 @@ def test_stream_flag_toggle_keeps_exactly_once(spark, tmp_path):
     table2 = create_pages_table(spark, str(tmp_path / "pages2"), num_buckets=8)
     pipe2 = CdcPipeline(spark, table2, str(tmp_path / "work2"))
     pipe2.run_replay(ev, epochs_per_batch=2, schema_evolutions=EVOLUTIONS)
-    a = pipe.pages_evolved().select("url", "warc_ts", "text", "language", "fetch_status")
-    b = pipe2.pages_evolved().select("url", "warc_ts", "text", "language", "fetch_status")
+    a = pipe.pages().select("url", "warc_ts", "text", "language", "fetch_status")
+    b = pipe2.pages().select("url", "warc_ts", "text", "language", "fetch_status")
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
