@@ -252,7 +252,10 @@ class LakeTable:
         start = 0
         if ckpt_v:
             d = self.log.read_checkpoint(ckpt_v)
-            if d is not None:
+            # a checkpoint written before the _FOLDED facts were folded
+            # cannot tell them; while the log still holds every commit, fold
+            # them from the start instead
+            if d is not None and (min_v > 1 or all(k in d for k in _FOLDED)):
                 st = TableState.from_dict(d)
                 start = ckpt_v
         for v, c in self.log.commits_since(start, version):

@@ -7,7 +7,8 @@ per-height loop, batched):
 1. **quarantine check** every event (Arrow decode-validity pass) — the
    AmbiguousEventError path (`pkg/eventlog/util.go:58-114`); flagged events
    land in the dead-letter store WITH raw payload ("raw events are never
-   lost", `parser/dex/dex.go:186`) and their effects are deferred;
+   lost", `parser/dex/dex.go:186`) before the batch commits, and their
+   effects are held back until a retry extracts them;
 2. **latest-wins dedup** per url over valid events (W5) — map-side-combining
    ``max_by`` aggregate (hot-domain-skew-proof, see operators.dedup_window);
 3. **extraction** (html→text pandas UDF) on dedup *winners only* —
@@ -30,8 +31,9 @@ bucket → the same delta commit), with no Spark job past the read of the
 batch; larger batches run the Spark plan. The fixed cost of a Spark apply
 (exchanges, one task per bucket, the bucketed write) is seconds, so a small
 micro-batch of a tailing stream spends almost all of its time there. Each
-commit records which mode ran as ``exec``. Dead-letter rows land in
-``quarantine/batch=N``: before the commit on the driver, after it on Spark.
+commit records which mode ran as ``exec``. Either way the batch's
+dead-letter rows land in ``quarantine/batch=N`` before its commit, written
+on the driver by one writer, so a crash after the commit cannot lose them.
 
 Exactly-once: batch boundaries are a pure function of configuration
 (``epochs_per_batch``), the commit is atomic, and the batch id is recorded in
@@ -96,11 +98,9 @@ PAGES_SCHEMA = T.StructType(
 
 PAGE_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
 
-# reserved ids outside the replay/streaming batch-id space (which is >= 0):
-# the deferred dead-letter capture directory, and the namespace offset for
-# quarantine-retry commit epochs (so a retry can never collide with — and
-# silently skip on — a regular batch epoch).
-_DEFERRED_BATCH_ID = -1
+# the namespace offset for quarantine-retry commit epochs, outside the
+# replay/streaming batch-id space (which is >= 0), so a retry can never
+# collide with — and silently skip on — a regular batch epoch
 _RETRY_EPOCH_BASE = -1000
 
 # A batch whose optimizer size estimate is below this many bytes applies on
@@ -108,6 +108,13 @@ _RETRY_EPOCH_BASE = -1000
 # CdcPipeline.apply_batch). It sits below the measured crossover, where a
 # batch of 8 KB pages applies equally fast either way (see CHANGES.md).
 _SMALL_BATCH_BYTES = 4 << 20
+
+# A Spark-path batch's dead-letter rows are fetched by seq in slices of at
+# most this many seqs (and at most _SMALL_BATCH_BYTES of html).
+_QUARANTINE_FETCH_SEQS = 1024
+
+# the event columns a dead-letter row keeps, raw payload included
+_QUARANTINE_COLUMNS = ["seq", "epoch", "op", "url", "warc_ts", "html", "lang"]
 
 # UTF-8 encoding of U+FFFD. The literal-replacement-char fast-path check is
 # done at the BYTE level (contains on the binary column): for valid UTF-8 it
@@ -136,6 +143,27 @@ def _commit_counts(got: dict, t0: float) -> dict:
         "min_seq": got["min_seq"],
         "apply_ms": int((time.time() - t0) * 1000),
     }
+
+
+def _fetch_slices(bad: list) -> list[list[int]]:
+    """Split a batch's observed (seq, html length) pairs into fetch slices
+    in seq order: each holds at least one seq, and adds no seq past
+    ``_QUARANTINE_FETCH_SEQS`` seqs or ``_SMALL_BATCH_BYTES`` of html."""
+    out: list[list[int]] = []
+    size = 0
+    for seq, n in sorted(bad):
+        n = n or 0
+        if not out or len(out[-1]) >= _QUARANTINE_FETCH_SEQS or size + n > _SMALL_BATCH_BYTES:
+            out.append([])
+            size = 0
+        out[-1].append(seq)
+        size += n
+    return out
+
+
+def _quarantine_errs(tbl: pa.Table) -> pa.Array:
+    """``check_quarantine_bytes`` of each row's html (null = valid)."""
+    return pa.array([check_quarantine_bytes(h) for h in tbl.column("html").to_pylist()], pa.string())
 
 
 def _page_names(st) -> dict[str, str]:
@@ -179,15 +207,13 @@ class CdcPipeline:
         self.compact_every = compact_every
         # M5 version dispatch: [(from_epoch, extractor_version), ...]
         self.extract_versions = sorted(extract_versions) if extract_versions else None
+        # Every batch writes its dead-letter rows before its commit, as the
+        # reference writes a height's quarantined events in the same
+        # transaction as its data (`parser/dex/dex.go:186`). The keyword
+        # survives only for callers that still pass it; both values mean
+        # this.
         if quarantine_mode not in ("batch", "deferred"):
             raise ValueError(f"unknown quarantine_mode: {quarantine_mode}")
-        # "batch": dead-letter rows are spilled within each micro-batch (the
-        # reference's per-height behavior). "deferred": run_replay captures
-        # them in ONE pass at the end — halves the per-batch scan count; the
-        # reference itself only *retries* quarantine on startup/periodically
-        # (`parser/dex/dex.go:93-100`), so capture lag is semantically safe:
-        # raw events remain in the immutable log either way.
-        self.quarantine_mode = quarantine_mode
         # The apply has one winner plan: a single-phase latest-wins
         # aggregate, then a bucket-placement exchange (see apply_batch).
         # The keyword survives only for callers that still pass "full".
@@ -208,8 +234,8 @@ class CdcPipeline:
         # CDC key is the canonical URL, so variants collapse into ONE
         # latest-wins key instead of fragmenting a hot page across several.
         # Normalization is a zero-shuffle projection applied at EVERY raw-
-        # event entry point (apply, expected-state/audit, quarantine
-        # capture all see the same keys — replay-equivalence still holds);
+        # event entry point (apply, expected-state/audit and dead-letter
+        # rows all see the same keys — replay-equivalence still holds);
         # the raw spelling stays recoverable from the immutable event log.
         # Off by default: exact-key mode is the reference's behavior.
         # The scheme is PROVENANCE: stamped into every data commit's
@@ -247,25 +273,23 @@ class CdcPipeline:
         ``"driver"``, anything else (or no estimate) means ``"spark"``.
         Both give the same table rows, dead-letter rows and commit summary;
         the summary and the returned stats record which one ran as
-        ``exec``.
+        ``exec``. Both write the batch's dead-letter rows BEFORE the
+        commit, so a crash after the commit cannot lose them, and the
+        commit's ``apply_ms`` includes that write.
 
         - **spark**: the whole batch streams through ONE job — validity
           check (Arrow decode pass) → latest-wins aggregate → extraction of
           winners → bucketed file write — with batch statistics (event
-          count, seq range, quarantine count) collected *during* that job
-          via ``Observation`` metrics. No ``persist()`` of raw html, no
-          second stats pass. In ``batch`` quarantine mode the dead-letter
-          rows are captured by a second job AFTER the commit, and only when
-          the observed quarantine count is non-zero.
+          count, seq range, quarantine count, and the quarantined events'
+          seqs and html lengths) collected *during* that job via
+          ``Observation`` metrics. No ``persist()`` of raw html, no second
+          stats pass. Between that job and the commit, the quarantined
+          rows are fetched by seq in bounded slices and written on the
+          driver.
         - **driver**: one Arrow pass — ``toArrow()``, the quarantine rule,
           latest-wins, extraction of winners, projection to the current
           schema and one pyarrow file per touched bucket — with no Spark
-          job past the read of the batch. In ``batch`` quarantine mode the
-          dead-letter rows are written BEFORE the commit, so a crash after
-          the commit cannot lose them.
-
-        In ``deferred`` quarantine mode both modes leave the dead-letter
-        rows to :meth:`run_replay`'s single pass.
+          job past the read of the batch.
         """
         events = self._normalize(events)
         st = self.table.state()
@@ -326,9 +350,7 @@ class CdcPipeline:
         current schema by field id, then a delta commit of one pyarrow file
         per touched bucket. Returns (append result, batch counts)."""
         tbl = events.toArrow()
-        errs = pa.array(
-            [check_quarantine_bytes(h) for h in tbl.column("html").to_pylist()], pa.string()
-        )
+        errs = _quarantine_errs(tbl)
         bad = pc.is_valid(errs)
         got = {
             "n": tbl.num_rows,
@@ -336,8 +358,8 @@ class CdcPipeline:
             "min_seq": pc.min(tbl.column("seq")).as_py(),
             "nq": int(pc.sum(bad).as_py() or 0),
         }
-        if got["nq"] and self.quarantine_mode == "batch":
-            self._write_quarantine_arrow(tbl.filter(bad), errs.filter(bad), batch_id)
+        if got["nq"]:
+            self._write_quarantine_arrow([(tbl.filter(bad), errs.filter(bad))], batch_id)
         winners = latest_wins(tbl.filter(pc.invert(bad)), "url", ["warc_ts", "seq"])
         htmls = winners.column("html").to_pylist()
         if self.extract_versions:
@@ -394,6 +416,9 @@ class CdcPipeline:
             F.max("seq").alias("max_seq"),
             F.min("seq").alias("min_seq"),
             F.count("__q_err").alias("nq"),
+            F.collect_list(
+                F.when(F.col("__q_err").isNotNull(), F.struct("seq", F.length("html")))
+            ).alias("bad"),
         )
         valid = ev.filter(F.col("__q_err").isNull()).drop("__q_err")
         n_buckets = st.num_buckets
@@ -442,69 +467,61 @@ class CdcPipeline:
                 # zero counts; anything else must surface.
                 if not ev.isEmpty():
                     raise
-                return {"n": 0, "max_seq": None, "min_seq": None, "nq": 0}
+                return {"n": 0, "max_seq": None, "min_seq": None, "nq": 0, "bad": []}
             return {
                 "n": int(got["n"] or 0),
                 "max_seq": got["max_seq"],
                 "min_seq": got["min_seq"],
                 "nq": int(got["nq"] or 0),
+                "bad": got["bad"],
             }
 
+        def _summary() -> dict:
+            got = _merged_obs()
+            if got["nq"]:
+                self._write_quarantine_arrow(self._fetch_quarantined(events, got["bad"]), batch_id)
+            return _commit_counts(got, t0)
+
         # the summary runs after the sink's write job (metrics available),
-        # before the atomic commit — watermark + counts land IN the commit,
-        # exactly like the reference's single-transaction CAS.
+        # before the atomic commit — dead-letter rows, watermark and counts
+        # land with the commit, like the reference's single-transaction CAS.
         res = self.table.append_delta(
-            batch, epoch=batch_id, summary_fn=lambda: _commit_counts(_merged_obs(), t0),
+            batch, epoch=batch_id, summary_fn=_summary,
             pre_partitioned=True,
             extra_summary={"key_norm": self._key_norm, "exec": "spark"},
         )
-        got = _merged_obs()
-        if got["nq"] and self.quarantine_mode == "batch":
-            self._capture_quarantine(events, batch_id)
-        return res, got
+        return res, _merged_obs()
 
-    def _capture_quarantine(self, events: DataFrame, batch_id: int) -> int:
-        """Recompute only the dead-letter slice: a JVM-side prefilter (strict
-        superset of the python ratio rule — invalid UTF-8 OR a literal '�' in
-        the decoded text, since the ratio rule counts U+FFFD in the DECODED
-        string) prunes ~99.8% of rows before any byte crosses to Python."""
-        candidates = events.filter((F.length("html") > 0) & ~_is_ok_fast_expr())
-        q = candidates.withColumn(
-            "__q_err", check_quarantine_udf()(F.col("html"))
-        ).filter(F.col("__q_err").isNotNull())
-        return self._write_quarantine(q, batch_id)
+    def _fetch_quarantined(self, events: DataFrame, bad: list):
+        """The batch's dead-letter rows with their errors, one slice of the
+        observed (seq, html length) pairs at a time (see ``_fetch_slices``),
+        so the driver never holds more than one slice of raw html. Each
+        slice's rows are read back by seq and re-checked with the same rule
+        on the driver."""
+        for seqs in _fetch_slices([(r[0], r[1]) for r in bad]):
+            rows = events.filter(F.col("seq").isin(seqs)).select(*_QUARANTINE_COLUMNS).toArrow()
+            errs = _quarantine_errs(rows)
+            keep = pc.is_valid(errs)
+            yield rows.filter(keep), errs.filter(keep)
 
-    def _write_quarantine(self, df: DataFrame, batch_id: int, suffix: str = "") -> int:
-        """Dead-letter store (T8): raw payload preserved; per-batch directory
-        overwrite makes replays idempotent (analog of the atomic quarantine
+    def _write_quarantine_arrow(self, slices, batch_id: int) -> None:
+        """Dead-letter store (T8): each (event rows, errors) slice becomes one
+        parquet file of the raw payload plus ``err`` and ``batch_id`` (typed
+        as Spark types the literal). The batch's directory is replaced whole
+        — its files are written to a hidden sibling, then renamed in — so a
+        replay rewrites it idempotently (analog of the atomic quarantine
         upsert, `parser/dex/repo/repository.go:302-330`)."""
-        out = df.select(
-            "seq", "epoch", "op", "url", "warc_ts", "html", "lang",
-            F.col("__q_err").alias("err"), F.lit(batch_id).alias("batch_id"),
-        )
-        path = os.path.join(self.quarantine_dir, f"batch={batch_id}{suffix}")
-        out.write.mode("overwrite").parquet(path)
-        import pyarrow.parquet as pq
-        import glob
-
-        return sum(
-            pq.ParquetFile(p).metadata.num_rows for p in glob.glob(os.path.join(path, "*.parquet"))
-        )
-
-    def _write_quarantine_arrow(self, bad: pa.Table, errs: pa.Array, batch_id: int) -> None:
-        """Driver-side twin of :meth:`_write_quarantine`: the same columns
-        (``batch_id`` typed as Spark types the literal), the same directory,
-        replaced whole — written to a hidden sibling, then renamed in."""
         id_type = pa.int32() if -(2**31) <= batch_id < 2**31 else pa.int64()
-        out = (
-            bad.select(["seq", "epoch", "op", "url", "warc_ts", "html", "lang"])
-            .append_column("err", errs)
-            .append_column("batch_id", pa.array([batch_id] * bad.num_rows, id_type))
-        )
         path = os.path.join(self.quarantine_dir, f"batch={batch_id}")
         tmp = os.path.join(self.quarantine_dir, f".tmp-{uuid.uuid4().hex}")
         os.makedirs(tmp)
-        pq.write_table(out, os.path.join(tmp, f"part-{uuid.uuid4().hex}.parquet"))
+        for bad, errs in slices:
+            out = (
+                bad.select(_QUARANTINE_COLUMNS)
+                .append_column("err", errs)
+                .append_column("batch_id", pa.array([batch_id] * bad.num_rows, id_type))
+            )
+            pq.write_table(out, os.path.join(tmp, f"part-{uuid.uuid4().hex}.parquet"))
         shutil.rmtree(path, ignore_errors=True)
         os.rename(tmp, path)
 
@@ -565,56 +582,14 @@ class CdcPipeline:
         if bounds[0] is None:
             return []
         first_b, last_b = int(bounds[0]) // epochs_per_batch, int(bounds[1]) // epochs_per_batch
-        done = self.table.committed_epochs()
-        # Deferred dead-letter capture overlaps the batch applies (guide
-        # §2.6: independent jobs back-fill each other's idle tails): the
-        # pass re-scans the whole log — measured 9 s of a 46 s 1M-event
-        # replay when run serially after the last batch — and reads/writes
-        # nothing the applies touch, so its wall time hides behind the
-        # batches' AQE barriers and write tails. Joined (and its errors
-        # re-raised) before this method returns, so callers still observe
-        # completed capture.
-        q_thread = None
-        q_err: list[BaseException] = []
-        if self.quarantine_mode == "deferred":
-            import threading
-
-            def _capture() -> None:
-                try:
-                    self._capture_quarantine(events, _DEFERRED_BATCH_ID)
-                except BaseException as e:  # noqa: BLE001 — re-raised on join
-                    q_err.append(e)
-
-            q_thread = threading.Thread(target=_capture, daemon=True)
-            q_thread.start()
         all_stats = []
         for b in range(first_b, last_b + 1):
             lo, hi = b * epochs_per_batch, (b + 1) * epochs_per_batch
             if schema_evolutions:
                 self._ensure_evolutions(lo, schema_evolutions)
             chunk = events.filter((F.col("epoch") >= lo) & (F.col("epoch") < hi))
-            if b in done:
-                # already committed upstream — but a crash may have hit
-                # BETWEEN that commit and the downstream post_commit tasks,
-                # so the healing chance must fire here too (the downstream
-                # advances are idempotent on the batch id and skip cheaply)
-                stats = {"batch_id": b, "skipped": True}
-                if self.post_commit is not None:
-                    self.post_commit(chunk, b, stats)
-                all_stats.append(stats)
-                continue
+            # apply_batch skips a committed batch and still runs post_commit
             all_stats.append(self.apply_batch(chunk, b))
-        if q_thread is not None:
-            # single amortized dead-letter pass over the WHOLE log, written
-            # to one fixed directory — unconditional (a crash-restarted
-            # replay reports skipped batches with no n_quarantined, so
-            # gating on stats would silently drop the capture) and
-            # idempotent across re-replays over a grown log (same dir is
-            # overwritten; no per-last-batch duplicate directories).
-            # Started before the first batch; completed here.
-            q_thread.join()
-            if q_err:
-                raise q_err[0]
         return all_stats
 
     # ------------------------------------------------------------ reads
@@ -866,8 +841,7 @@ class CdcPipeline:
         # is exactly the crash-heal case where the previous pass committed
         # its append but died before clearing resolved rows
         still = staged.filter(F.col("__extract_err").isNotNull()).select(
-            "seq", "epoch", "op", "url", "warc_ts", "html", "lang",
-            F.col("__extract_err").alias("err"), "batch_id",
+            *_QUARANTINE_COLUMNS, F.col("__extract_err").alias("err"), "batch_id"
         )
         keep_dir = os.path.join(self.quarantine_dir, f"batch=retry_{int(batch_id)}")
         old_dirs = [

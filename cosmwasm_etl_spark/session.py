@@ -59,12 +59,14 @@ def build_session(
         # html pages) build ~8 MB value arrays instead of the default
         # 4096-row ~32 MB ones: with an 8 g heap G1 regions are 4 MB, so a
         # 32 MB byte[] is a humongous allocation needing 8 CONTIGUOUS free
-        # regions — under two concurrent scans of the event log (batch
-        # apply + overlapped dead-letter capture) fragmentation made that
-        # reservation fail intermittently (observed: "Cannot reserve
-        # additional contiguous bytes in the vectorized reader", fatal to
-        # the whole local JVM). 1024 rows keeps narrow-table scan batches
-        # plenty large while making payload-column vectors region-sized.
+        # regions — under two concurrent scans of the event log (a batch
+        # apply beside a whole-log dead-letter pass, which has since been
+        # removed) fragmentation made that reservation fail intermittently
+        # (observed: "Cannot reserve additional contiguous bytes in the
+        # vectorized reader", fatal to the whole local JVM). Kept: any two
+        # concurrent scans of 8 KB pages can fragment the heap the same
+        # way, and 1024 rows keeps narrow-table scan batches plenty large
+        # while making payload-column vectors region-sized.
         .config(
             "spark.sql.parquet.columnarReaderBatchSize",
             os.environ.get("SPARK_GRAFT_PARQUET_BATCH", "1024"),

@@ -113,7 +113,6 @@ def main() -> int:
         table,
         args.work,
         compact_every=args.compact_every,
-        quarantine_mode="deferred" if args.mode == "replay" else "batch",
         canonicalize_keys=args.canonicalize_keys,
     )
     ckpt = args.checkpoint or f"{args.work}/checkpoint"

@@ -188,10 +188,12 @@ def test_latest_wins_and_bucket_routing_match_spark(spark):
     assert {u: bucket_of(u, 13) for u in spark_b} == spark_b
 
 
-def test_driver_dead_letters_survive_a_crash_after_commit(spark, tmp_path, monkeypatch):
-    """On the driver path dead-letter rows are written before the commit:
-    a process that dies right after ``append_delta`` returns, then replays
+@pytest.mark.parametrize("mode", ["driver", "spark"])
+def test_dead_letters_survive_a_crash_after_commit(spark, tmp_path, monkeypatch, mode):
+    """On both paths dead-letter rows are written before the commit: a
+    process that dies right after ``append_delta`` returns, then replays
     (and skips) the committed batch, still has every quarantined event."""
+    monkeypatch.setattr(pipeline_mod, "_SMALL_BATCH_BYTES", FORCE[mode])
     events = synthetic_events(spark, 1_000, n_urls=300, events_per_epoch=1_000, quarantine_per_mille=20)
     write_event_log(events, str(tmp_path / "ev"), range_partitions=1)
     batch = read_event_log(spark, str(tmp_path / "ev"))
@@ -209,7 +211,7 @@ def test_driver_dead_letters_survive_a_crash_after_commit(spark, tmp_path, monke
     with pytest.raises(RuntimeError, match="died"):
         pipe.apply_batch(batch, 0)
     monkeypatch.setattr(LakeTable, "append_delta", append_delta)
-    assert [h["summary"]["exec"] for h in table.history() if h["operation"] == "delta"] == ["driver"]
+    assert [h["summary"]["exec"] for h in table.history() if h["operation"] == "delta"] == [mode]
 
     pipe2 = CdcPipeline(spark, LakeTable.load(spark, table.path), str(tmp_path / "work"))
     assert pipe2.apply_batch(batch, 0)["skipped"]

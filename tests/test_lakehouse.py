@@ -586,9 +586,10 @@ def test_describe_metadata_only(spark, table):
 
 
 def test_folded_facts_ride_checkpoints(table):
-    """applied_events, min_seq and delta_commits survive a checkpoint; one
-    written before they were folded loads them as unknown (None), and only
-    a compaction makes the delta count known again."""
+    """applied_events, min_seq and delta_commits survive a checkpoint. One
+    written before they were folded is passed over while the log still
+    holds every commit; after a vacuum it loads them as unknown (None), and
+    only a compaction makes the delta count known again."""
     import pyarrow as pa
 
     def commit(epoch, n, lo):
@@ -613,8 +614,17 @@ def test_folded_facts_ride_checkpoints(table):
     folded = ("applied_events", "min_seq", "delta_commits")
     legacy = {k: v for k, v in st.to_dict().items() if k not in folded}
     table.log.write_checkpoint(st.version, legacy)
-    assert facts() == (None, None, None)
+    assert facts() == (5, 5, 2)
     commit(2, 4, 0)
+    assert facts() == (9, 0, 3)
+    # vacuumed: the commits before the horizon are gone
+    table.vacuum(retain_versions=1)
+    horizon = table.log.min_version()
+    assert horizon > 1
+    legacy = {k: v for k, v in table.log.read_checkpoint(horizon).items() if k not in folded}
+    table.log.write_checkpoint(horizon, legacy)
+    assert facts() == (None, None, None)
+    commit(3, 4, 0)
     assert facts() == (None, None, None)
     table.compact(lambda df: df)
     assert facts() == (None, None, 0)

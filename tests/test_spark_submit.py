@@ -100,4 +100,11 @@ def test_spark_submit_pyfiles_replay(spark, tmp_path):
     table = LakeTable.load(spark, table_dir)
     assert table.read().count() > 0
     pipe = CdcPipeline(spark, table, work_dir)
-    assert pipe.audit(spark.read.parquet(events_dir)).count() == 0
+    log = spark.read.parquet(events_dir)
+    assert pipe.audit(log).count() == 0
+    # every event the quarantine rule rejects is in the dead-letter store
+    from cosmwasm_etl_spark.functions.extraction import check_quarantine_bytes
+
+    want = {r.seq for r in log.select("seq", "html").collect() if check_quarantine_bytes(r.html)}
+    assert want
+    assert sorted(r.seq for r in pipe.read_quarantine().select("seq").collect()) == sorted(want)
