@@ -515,13 +515,17 @@ class CdcPipeline:
         path = os.path.join(self.quarantine_dir, f"batch={batch_id}")
         tmp = os.path.join(self.quarantine_dir, f".tmp-{uuid.uuid4().hex}")
         os.makedirs(tmp)
-        for bad, errs in slices:
-            out = (
-                bad.select(_QUARANTINE_COLUMNS)
-                .append_column("err", errs)
-                .append_column("batch_id", pa.array([batch_id] * bad.num_rows, id_type))
-            )
-            pq.write_table(out, os.path.join(tmp, f"part-{uuid.uuid4().hex}.parquet"))
+        try:
+            for bad, errs in slices:
+                out = (
+                    bad.select(_QUARANTINE_COLUMNS)
+                    .append_column("err", errs)
+                    .append_column("batch_id", pa.array([batch_id] * bad.num_rows, id_type))
+                )
+                pq.write_table(out, os.path.join(tmp, f"part-{uuid.uuid4().hex}.parquet"))
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
         shutil.rmtree(path, ignore_errors=True)
         os.rename(tmp, path)
 

@@ -8,7 +8,9 @@ way on the same batches and require identical results."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -216,6 +218,34 @@ def test_dead_letters_survive_a_crash_after_commit(spark, tmp_path, monkeypatch,
     pipe2 = CdcPipeline(spark, LakeTable.load(spark, table.path), str(tmp_path / "work"))
     assert pipe2.apply_batch(batch, 0)["skipped"]
     assert {r.seq for r in pipe2.read_quarantine().collect()} == want
+
+
+def test_dead_letter_fetch_slices(monkeypatch):
+    """Slices go in seq order, hold at most 1,024 seqs and
+    ``_SMALL_BATCH_BYTES`` of html, and never come out empty: a page larger
+    than the limit is a slice of its own."""
+    assert [len(s) for s in pipeline_mod._fetch_slices([(i, 1) for i in range(2_500)])] == [
+        1024, 1024, 452
+    ]
+    monkeypatch.setattr(pipeline_mod, "_SMALL_BATCH_BYTES", 100)
+    bad = [(3, 60), (1, 60), (2, 200), (4, 30), (5, None)]
+    assert pipeline_mod._fetch_slices(bad) == [[1], [2], [3, 4, 5]]
+
+
+def test_failed_dead_letter_write_leaves_no_files(spark, tmp_path):
+    """A fetch that fails mid-write removes its hidden directory, and the
+    batch's directory is never renamed in."""
+    table = create_pages_table(spark, str(tmp_path / "pages"), num_buckets=4)
+    pipe = CdcPipeline(spark, table, str(tmp_path / "work"))
+
+    def slices():
+        rows = base_events(spark).toArrow().slice(4, 1)
+        yield rows, pa.array(["bad"], pa.string())
+        raise RuntimeError("fetch failed")
+
+    with pytest.raises(RuntimeError, match="fetch failed"):
+        pipe._write_quarantine_arrow(slices(), 0)
+    assert os.listdir(pipe.quarantine_dir) == []
 
 
 def test_exec_mode_gate_runs_no_job(spark, tmp_path, monkeypatch):
