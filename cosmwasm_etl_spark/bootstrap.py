@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cosmwasm_etl_spark.functions.extraction import with_extracted_text
+from cosmwasm_etl_spark.plans.pipeline import _page_names, project_df
 
 # bootstrap commits use their own epoch namespace (regular batches are >= 0,
 # retries are <= -1000): a bootstrap can never collide with either.
@@ -96,23 +97,22 @@ def bootstrap_from_snapshot(
       replayed)."""
     if mode not in ("merge", "repair"):
         raise ValueError(f"unknown bootstrap mode: {mode}")
-    events = classify_snapshot_diff(snapshot, pipe.pages())
-    seq = max(pipe.table.watermark(), 0)
+    st = pipe.table.state()
+    # the live pages under the names the table was created with, which the
+    # snapshot uses, whatever renames happened since
+    current = pipe.pages().select(
+        *[F.col(cur).alias(first) for first, cur in _page_names(st).items()]
+    )
+    events = classify_snapshot_diff(snapshot, current)
+    seq = max(st.watermark, 0)
     extracted = with_extracted_text(events, html_col="html", out_text="text")
     ok = (
         extracted.filter(F.col("__extract_err").isNull())
         .withColumn("seq", F.lit(seq).cast("long"))
         .withColumn("deleted", F.col("op") == "delete")
     )
-    # dynamic projection to the CURRENT (possibly evolved) table schema
-    cur_schema = pipe.table.state().schema.to_spark()
-    cols = [
-        F.col(f.name).cast(f.dataType).alias(f.name)
-        if f.name in ok.columns
-        else F.lit(None).cast(f.dataType).alias(f.name)
-        for f in cur_schema.fields
-    ]
-    batch = ok.select(*cols)
+    # to the CURRENT (possibly evolved) table schema, by field id
+    batch = project_df(ok, st)
     res = pipe.table.merge_upserts(
         batch,
         epoch=_BOOTSTRAP_EPOCH_BASE - int(bootstrap_id),

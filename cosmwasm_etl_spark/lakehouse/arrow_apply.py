@@ -1,13 +1,13 @@
-"""Driver-side Arrow pieces of the pages-table apply path.
+"""Arrow pieces of the pages-table apply path.
 
-Both execution modes of ``CdcPipeline.apply_batch`` share these pure
-rules: the Spark plan for large batches and the one-pass Arrow apply for
-small ones. The module imports only the stdlib and pyarrow, never Spark:
+``CdcPipeline.apply_batch`` has one apply core, which runs these pure
+rules on the driver for small batches and inside ``mapInArrow`` tasks for
+large ones. The module imports only the stdlib and pyarrow, never Spark:
 
 - **bucket routing** — Spark's ``pmod(xxhash64(key), num_buckets)``
   re-derived in plain Python (XXH64 from the public xxHash spec, with
   Spark's per-type chaining), so driver-written files, point lookups and
-  the Spark writer place every key in the same bucket;
+  Spark's own writers place every key in the same bucket;
 - **field-id source resolution** — which event column feeds each column of
   the current table schema, following renames through the historical
   schema versions;
@@ -161,16 +161,45 @@ _ARROW_TYPES = {
     "date": pa.date32(),
 }
 _DECIMAL = re.compile(r"decimal\((\d+),\s*(\d+)\)")
+_NESTED = re.compile(r"(array|map|struct)<(.*)>", re.S)
+
+
+def _split_top(s: str) -> list[str]:
+    """``s`` split at the commas outside any ``<>`` or ``()``."""
+    parts, depth, start = [], 0, 0
+    for i, ch in enumerate(s):
+        if ch in "<(":
+            depth += 1
+        elif ch in ">)":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            parts.append(s[start:i].strip())
+            start = i + 1
+    parts.append(s[start:].strip())
+    return parts
 
 
 def arrow_type(lake_type: str) -> pa.DataType:
-    """Arrow type of a lakehouse column type; ``ValueError`` for the nested
-    types, which only the Spark path writes."""
+    """Arrow type of a lakehouse column type: the primitives, decimals and
+    Spark's nested ``array<t>``, ``map<k,v>`` and ``struct<name:t,...>``
+    (their ``simpleString`` form); ``ValueError`` for anything else."""
+    lake_type = lake_type.strip()
     if lake_type in _ARROW_TYPES:
         return _ARROW_TYPES[lake_type]
     m = _DECIMAL.fullmatch(lake_type)
     if m:
         return pa.decimal128(int(m.group(1)), int(m.group(2)))
+    m = _NESTED.fullmatch(lake_type)
+    if m:
+        kind, args = m.group(1), _split_top(m.group(2))
+        if kind == "array" and len(args) == 1:
+            return pa.list_(arrow_type(args[0]))
+        if kind == "map" and len(args) == 2:
+            return pa.map_(arrow_type(args[0]), arrow_type(args[1]))
+        if kind == "struct" and all(":" in a for a in args):
+            return pa.struct(
+                [pa.field(n.strip(), arrow_type(t)) for n, t in (a.split(":", 1) for a in args)]
+            )
     raise ValueError(f"no Arrow mapping for lakehouse type: {lake_type}")
 
 

@@ -166,6 +166,42 @@ def _file_stats(
     return rows, size, k_mn, k_mx, _ts_cmp(t_mn, True), _ts_cmp(t_mx, False)
 
 
+def _add_entry(table_path: str, abs_path: str, bucket: int, st) -> dict:
+    """The add-entry of one written data file, from its footer."""
+    rows, size, mn, mx, t_mn, t_mx = _file_stats(abs_path, st.key_col, st.ts_col)
+    return {
+        "path": os.path.relpath(abs_path, table_path),
+        "bucket": bucket,
+        "rows": rows,
+        "bytes": size,
+        "schema_version": st.schema.schema_version,
+        "min_key": mn,
+        "max_key": mx,
+        "min_ts": t_mn,
+        "max_ts": t_mx,
+    }
+
+
+def write_bucket_files(tbl: "_pa.Table", table_path: str, stage_rel: str, st) -> list[dict]:
+    """Write ``tbl``'s rows as one pyarrow parquet file per touched bucket
+    under ``<table_path>/<stage_rel>/__bucket=b/`` (the layout of
+    :meth:`LakeTable._write_files`, rows kept in order) and return their
+    add-entries. ``st`` needs only ``schema``, ``key_col``, ``ts_col`` and
+    ``num_buckets``, so the pipeline's apply tasks call this as well as the
+    driver. pyarrow 16 writes no parquet bloom filters, so these files
+    carry none even when ``SPARK_GRAFT_PARQUET_BLOOM_NDV`` is set;
+    compaction, which runs on Spark, writes them."""
+    tbl = tbl.select(st.schema.names()).cast(arrow_schema(st.schema))
+    adds = []
+    for bucket, part in split_by_bucket(tbl, st.key_col, st.num_buckets).items():
+        out_dir = os.path.join(table_path, stage_rel, f"{_BUCKET}={bucket}")
+        os.makedirs(out_dir, exist_ok=True)  # a retried task's earlier attempt made it
+        path = os.path.join(out_dir, f"part-{uuid.uuid4().hex}.parquet")
+        _pq.write_table(part, path)
+        adds.append(_add_entry(table_path, path, bucket, st))
+    return adds
+
+
 class LakeTable:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -469,18 +505,12 @@ class LakeTable:
         df: DataFrame,
         st: TableState,
         n_parts: int,
-        pre_partitioned: bool = False,
         sort_by: str | None = None,
     ) -> list[dict]:
-        """Write df (must carry __bucket) partitioned by bucket; return add-entries.
-
-        ``pre_partitioned=True`` skips the bucket repartition when the caller
-        already placed an explicit ``repartition(N, __bucket)`` upstream (so
-        the 8 KB html payloads cross exactly ONE exchange in the whole apply
-        path, not two)."""
+        """Write df (must carry __bucket) partitioned by bucket; return add-entries."""
         stage_rel = os.path.join("data", uuid.uuid4().hex)
         stage_abs = os.path.join(self.path, stage_rel)
-        out = df if pre_partitioned else df.repartition(max(n_parts, 1), F.col(_BUCKET))
+        out = df.repartition(max(n_parts, 1), F.col(_BUCKET))
         if sort_by:
             # cluster rows by key inside each written file: row-group min/max
             # stats on the key become tight, so point lookups skip row groups
@@ -505,28 +535,10 @@ class LakeTable:
         writer.parquet(stage_abs)
         return self._add_entries(stage_abs, st)
 
-    def _write_arrow_files(self, tbl: "_pa.Table", st: TableState) -> list[dict]:
-        """Driver-side twin of :meth:`_write_files` for a small in-memory
-        batch: one pyarrow parquet file per touched bucket, under the same
-        ``data/<uuid>/__bucket=b/`` layout, rows kept in the caller's order.
-        pyarrow 16 writes no parquet bloom filters, so these files carry
-        none even when ``SPARK_GRAFT_PARQUET_BLOOM_NDV`` is set; compaction,
-        which runs on Spark, writes them."""
-        stage_abs = os.path.join(self.path, "data", uuid.uuid4().hex)
-        tbl = tbl.select(st.schema.names()).cast(arrow_schema(st.schema))
-        for bucket, part in split_by_bucket(tbl, st.key_col, st.num_buckets).items():
-            out_dir = os.path.join(stage_abs, f"{_BUCKET}={bucket}")
-            os.makedirs(out_dir)
-            _pq.write_table(part, os.path.join(out_dir, f"part-{uuid.uuid4().hex}.parquet"))
-        # footers of a few tiny files just written: reading them in this
-        # thread takes ~1 ms, starting a pool per batch several ms more
-        return self._add_entries(stage_abs, st, pool=False)
-
-    def _add_entries(self, stage_abs: str, st: TableState, pool: bool = True) -> list[dict]:
+    def _add_entries(self, stage_abs: str, st: TableState) -> list[dict]:
         """Add-entries (footer stats, no data read) for every non-empty
         parquet file under a ``__bucket=b`` directory of ``stage_abs``;
-        footers are read by a thread pool unless ``pool`` is false."""
-        entries: list[dict] = []
+        footers are read by a thread pool."""
         todo: list[tuple[str, int]] = []
         for dirpath, _dirs, names in os.walk(stage_abs):
             base = os.path.basename(dirpath)
@@ -536,29 +548,9 @@ class LakeTable:
             for n in names:
                 if n.endswith(".parquet"):
                     todo.append((os.path.join(dirpath, n), bucket))
-        key_col, ts_col = st.key_col, st.ts_col
-        if pool:
-            with _fut.ThreadPoolExecutor(max_workers=16) as ex:
-                stats = list(ex.map(lambda t: _file_stats(t[0], key_col, ts_col), todo))
-        else:
-            stats = [_file_stats(p, key_col, ts_col) for p, _b in todo]
-        for (abs_p, bucket), (rows, size, mn, mx, t_mn, t_mx) in zip(todo, stats):
-            if rows == 0:
-                continue
-            entries.append(
-                {
-                    "path": os.path.relpath(abs_p, self.path),
-                    "bucket": bucket,
-                    "rows": rows,
-                    "bytes": size,
-                    "schema_version": st.schema.schema_version,
-                    "min_key": mn,
-                    "max_key": mx,
-                    "min_ts": t_mn,
-                    "max_ts": t_mx,
-                }
-            )
-        return entries
+        with _fut.ThreadPoolExecutor(max_workers=16) as ex:
+            entries = list(ex.map(lambda t: _add_entry(self.path, t[0], t[1], st), todo))
+        return [e for e in entries if e["rows"]]
 
     def append(self, df: DataFrame, epoch: int | None = None, watermark: int | None = None) -> dict:
         """Append-only commit (bootstrap path; analog of batch insert S7)."""
@@ -803,11 +795,10 @@ class LakeTable:
 
     def append_delta(
         self,
-        df: "DataFrame | _pa.Table",
+        df: "DataFrame | _pa.Table | list[dict]",
         epoch: int | None = None,
         watermark: int | None = None,
         summary_fn=None,
-        pre_partitioned: bool = False,
         extra_summary: dict | None = None,
     ) -> dict:
         """Merge-on-read write path (LSM-style, the Hudi/Paimon MOR pattern):
@@ -818,20 +809,23 @@ class LakeTable:
         the sustained-ingest path: COW merge cost grows with table size,
         delta append cost only with batch size.
 
-        ``df`` is a DataFrame (written by a Spark job) or a
-        ``pyarrow.Table`` already in the current schema (written on the
-        driver, one file per touched bucket). Only the file write differs:
-        add-entries, summary and commit are shared."""
+        ``df`` is a DataFrame (written by a Spark job), a ``pyarrow.Table``
+        in the current schema (written on the driver by
+        :func:`write_bucket_files`), or the add-entries of files the caller
+        already wrote under the table's ``data/`` with that function. Only
+        the file write differs: summary and commit are shared."""
         st = self.state()
         if epoch is not None and epoch in st.epochs:
             return {"skipped": True, "reason": "epoch already committed", "epoch": epoch}
-        if isinstance(df, _pa.Table):
-            adds = self._write_arrow_files(df, st)
+        if isinstance(df, list):
+            adds = df
+        elif isinstance(df, _pa.Table):
+            adds = write_bucket_files(df, self.path, os.path.join("data", uuid.uuid4().hex), st)
         else:
             dfb = df.select(*st.schema.names()).withColumn(
                 _BUCKET, self._bucket_expr(st.key_col, st.num_buckets)
             )
-            adds = self._write_files(dfb, st, st.num_buckets, pre_partitioned=pre_partitioned)
+            adds = self._write_files(dfb, st, st.num_buckets)
         summary = {
             "epoch": epoch,
             "watermark": watermark,

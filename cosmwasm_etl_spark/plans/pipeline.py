@@ -4,15 +4,16 @@ parser replay loop (`/root/reference/parser/dex/dex.go:87-267`).
 Per micro-batch (= a contiguous range of event epochs; the reference's
 per-height loop, batched):
 
-1. **quarantine check** every event (Arrow decode-validity pass) — the
+1. **quarantine check** every event (``check_quarantine_bytes``) — the
    AmbiguousEventError path (`pkg/eventlog/util.go:58-114`); flagged events
    land in the dead-letter store WITH raw payload ("raw events are never
    lost", `parser/dex/dex.go:186`) before the batch commits, and their
    effects are held back until a retry extracts them;
-2. **latest-wins dedup** per url over valid events (W5) — map-side-combining
-   ``max_by`` aggregate (hot-domain-skew-proof, see operators.dedup_window);
-3. **extraction** (html→text pandas UDF) on dedup *winners only* —
-   winners ≪ events, so the Python-side work is minimized;
+2. **latest-wins dedup** per url over valid events (W5) on (warc_ts, seq),
+   first within each slice of the input (a map-side combine: a hot url
+   leaves a slice as one row), then over whole buckets;
+3. **extraction** (html→text) on dedup *winners only* — winners ≪ events,
+   so the Python-side work is minimized;
 4. **delta append** to the lakehouse pages table in ONE atomic commit
    carrying the batch id + high-watermark — the analog of the reference's
    single-Postgres-transaction insert + synced-height CAS
@@ -22,18 +23,17 @@ per-height loop, batched):
 5. **lineage** is that commit's summary (batch id, seq range, counts, apply
    time) — T12 observability; the commit log is the pipeline's only record.
 
-Execution is chosen per batch by its size (*Evolution of a Compiling Query
-Engine*, VLDB 2021: pick the execution mode by the size of the work). A
-batch whose optimizer size estimate is below ``_SMALL_BATCH_BYTES`` runs
-steps 1–4 on the driver in one Arrow pass (``toArrow()`` → the same pure
-quarantine, latest-wins and extraction rules → one pyarrow file per touched
-bucket → the same delta commit), with no Spark job past the read of the
-batch; larger batches run the Spark plan. The fixed cost of a Spark apply
-(exchanges, one task per bucket, the bucketed write) is seconds, so a small
-micro-batch of a tailing stream spends almost all of its time there. Each
-commit records which mode ran as ``exec``. Either way the batch's
-dead-letter rows land in ``quarantine/batch=N`` before its commit, written
-on the driver by one writer, so a crash after the commit cannot lose them.
+Steps 1–3 and the data-file write are one Arrow core (``_Apply``) in two
+stages, run over whole Arrow tables (*Accelerating Python UDFs in
+Vectorized Query Execution*, CIDR 2022). Where it runs is chosen per batch
+by its size (*Evolution of a Compiling Query Engine*, VLDB 2021: pick the
+execution mode by the size of the work): a batch whose optimizer size
+estimate is below ``_SMALL_BATCH_BYTES`` runs both stages on the driver
+over one ``toArrow()`` table, with no Spark job past the read of the batch;
+a larger one runs them in ``mapInArrow`` tasks with one exchange by bucket
+between. Each commit records which mode ran as ``exec``. Either way the
+batch's dead-letter rows are renamed into ``quarantine/batch=N`` before its
+commit, so a crash after the commit cannot lose them.
 
 Exactly-once: batch boundaries are a pure function of configuration
 (``epochs_per_batch``), the commit is atomic, and the batch id is recorded in
@@ -44,17 +44,21 @@ tests/test_replay.py).
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import time
 import uuid
+from dataclasses import dataclass
 
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema, from_arrow_type
 
 from cosmwasm_etl_spark.functions.extraction import (
     check_quarantine_bytes,
@@ -65,13 +69,10 @@ from cosmwasm_etl_spark.functions.extraction import (
     with_extracted_text_versioned,
 )
 from cosmwasm_etl_spark.lakehouse import LakeTable
-from cosmwasm_etl_spark.lakehouse.arrow_apply import (
-    arrow_schema,
-    latest_wins,
-    project,
-    resolve_sources,
-)
+from cosmwasm_etl_spark.lakehouse.arrow_apply import latest_wins, project, resolve_sources
+from cosmwasm_etl_spark.lakehouse.schema import TableSchema
 from cosmwasm_etl_spark.lakehouse.schema import _parse_type as _parse_lake_type
+from cosmwasm_etl_spark.lakehouse.table import write_bucket_files
 from cosmwasm_etl_spark.operators.dedup_window import latest_wins_agg
 from cosmwasm_etl_spark.operators.validation import full_outer_diff
 
@@ -104,14 +105,10 @@ PAGE_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
 _RETRY_EPOCH_BASE = -1000
 
 # A batch whose optimizer size estimate is below this many bytes applies on
-# the driver in one Arrow pass; larger ones run the Spark plan (see
-# CdcPipeline.apply_batch). It sits below the measured crossover, where a
-# batch of 8 KB pages applies equally fast either way (see CHANGES.md).
+# the driver; larger ones run in Spark tasks (see CdcPipeline.apply_batch).
+# It sits below the measured crossover, where a batch of 8 KB pages applies
+# equally fast either way (see CHANGES.md).
 _SMALL_BATCH_BYTES = 4 << 20
-
-# A Spark-path batch's dead-letter rows are fetched by seq in slices of at
-# most this many seqs (and at most _SMALL_BATCH_BYTES of html).
-_QUARANTINE_FETCH_SEQS = 1024
 
 # the event columns a dead-letter row keeps, raw payload included
 _QUARANTINE_COLUMNS = ["seq", "epoch", "op", "url", "warc_ts", "html", "lang"]
@@ -124,6 +121,19 @@ _QUARANTINE_COLUMNS = ["seq", "epoch", "op", "url", "warc_ts", "html", "lang"]
 # safe under an evaluation order Catalyst does not guarantee.
 _UFFFD_BYTES = b"\xef\xbf\xbd"
 
+_ORDER = ["warc_ts", "seq"]
+# a slice's event count and seq range, carried from the first apply stage to
+# the driver on one extra row (see _Apply)
+_COUNTS = pa.struct([("n", pa.int64()), ("min_seq", pa.int64()), ("max_seq", pa.int64())])
+# the add-entry of a data file written by the second apply stage
+_ADD = pa.struct(
+    [
+        ("path", pa.string()), ("bucket", pa.int32()), ("rows", pa.int64()),
+        ("bytes", pa.int64()), ("schema_version", pa.int32()), ("min_key", pa.string()),
+        ("max_key", pa.string()), ("min_ts", pa.int64()), ("max_ts", pa.int64()),
+    ]
+)
+
 
 def _is_ok_fast_expr():
     """JVM fast-path validity: empty, or valid UTF-8 without a literal
@@ -134,36 +144,138 @@ def _is_ok_fast_expr():
     )
 
 
-def _commit_counts(got: dict, t0: float) -> dict:
-    """A batch's counts and apply time since ``t0``, as its commit records them."""
-    return {
-        "watermark": got["max_seq"],
-        "n_events": got["n"],
-        "n_quarantined": got["nq"],
-        "min_seq": got["min_seq"],
-        "apply_ms": int((time.time() - t0) * 1000),
-    }
-
-
-def _fetch_slices(bad: list) -> list[list[int]]:
-    """Split a batch's observed (seq, html length) pairs into fetch slices
-    in seq order: each holds at least one seq, and adds no seq past
-    ``_QUARANTINE_FETCH_SEQS`` seqs or ``_SMALL_BATCH_BYTES`` of html."""
-    out: list[list[int]] = []
-    size = 0
-    for seq, n in sorted(bad):
-        n = n or 0
-        if not out or len(out[-1]) >= _QUARANTINE_FETCH_SEQS or size + n > _SMALL_BATCH_BYTES:
-            out.append([])
-            size = 0
-        out[-1].append(seq)
-        size += n
-    return out
-
-
 def _quarantine_errs(tbl: pa.Table) -> pa.Array:
     """``check_quarantine_bytes`` of each row's html (null = valid)."""
     return pa.array([check_quarantine_bytes(h) for h in tbl.column("html").to_pylist()], pa.string())
+
+
+def _sum_counts(counts: pa.ChunkedArray) -> dict:
+    """The non-null slice counts of a ``_COUNTS`` column as one; no slices
+    count zero events."""
+    c = counts.drop_null().combine_chunks()
+    n, lo, hi = (c.field(k) for k in ("n", "min_seq", "max_seq"))
+    return {"n": pc.sum(n).as_py() or 0, "min_seq": pc.min(lo).as_py(), "max_seq": pc.max(hi).as_py()}
+
+
+def _write_dead_letters(
+    bad: pa.Table, errs: pa.Array, out_dir: str, part: int, batch_id: int
+) -> None:
+    """Dead-letter store (T8): one slice's quarantined events, raw payload
+    included, plus ``err`` and ``batch_id`` (typed as Spark types the
+    literal), as part ``part`` of ``out_dir``. A rerun of the slice (a
+    task retry) replaces its part; the part is written under a hidden name
+    and renamed, so it is never half written."""
+    id_type = pa.int32() if -(2**31) <= batch_id < 2**31 else pa.int64()
+    out = (
+        bad.select(_QUARANTINE_COLUMNS)
+        .append_column("err", errs)
+        .append_column("batch_id", pa.array([batch_id] * bad.num_rows, id_type))
+    )
+    os.makedirs(out_dir, exist_ok=True)
+    tmp = os.path.join(out_dir, f".part-{part:05d}-{uuid.uuid4().hex}")
+    pq.write_table(out, tmp)
+    os.replace(tmp, os.path.join(out_dir, f"part-{part:05d}.parquet"))
+
+
+@dataclass(frozen=True)
+class _Apply:
+    """One batch's apply rules as two stages over Arrow tables. The driver
+    mode runs both in-process over the whole batch; the Spark mode runs
+    :meth:`reduce` in one task per input partition and :meth:`write` in one
+    task per partition of a single exchange by bucket. It carries the
+    table's schemas, key, ts and bucket count — it stands in for the table
+    state in ``project`` and ``write_bucket_files`` — but never the file
+    list, so it is small to ship to every task."""
+
+    batch_id: int
+    dead_dir: str  # the batch's hidden dead-letter directory
+    table_path: str
+    stage_rel: str  # the batch's data directory, relative to table_path
+    schema: TableSchema
+    schemas: dict
+    key_col: str
+    ts_col: str
+    num_buckets: int
+    extract_versions: tuple | None
+
+    def reduce(self, tbl: pa.Table, part: int) -> pa.Table:
+        """Stage 1 over one slice of the batch's events:
+        ``check_quarantine_bytes`` on every event, the rejected ones written
+        as dead-letter part ``part``, and latest-wins on (warc_ts, seq) over
+        the rest — a map-side combine, so a hot url leaves the slice as one
+        row. The slice's counts ride on one extra row whose ``__counts`` is
+        set and whose other columns are null."""
+        errs = _quarantine_errs(tbl)
+        bad = pc.is_valid(errs)
+        if pc.any(bad).as_py():
+            _write_dead_letters(
+                tbl.filter(bad), errs.filter(bad), self.dead_dir, part, self.batch_id
+            )
+        seq = tbl.column("seq")
+        counts = {"n": tbl.num_rows, "min_seq": pc.min(seq).as_py(), "max_seq": pc.max(seq).as_py()}
+        winners = latest_wins(tbl.filter(pc.invert(bad)), "url", _ORDER)
+        row = pa.table({"__counts": pa.array([counts], _COUNTS)})
+        return pa.concat_tables([winners, row], promote_options="default")
+
+    def write(self, tbl: pa.Table) -> pa.Table:
+        """Stage 2 over the reduced rows of whole buckets: the final
+        latest-wins, the extractor (version-dispatched by epoch) on winners
+        only, projection to the current schema by field id and one pyarrow
+        file per bucket. Returns one ``add`` row per file and one ``counts``
+        row for the slices it received."""
+        has = pc.is_valid(tbl.column("__counts"))
+        winners = latest_wins(tbl.filter(pc.invert(has)).drop_columns(["__counts"]), "url", _ORDER)
+        htmls = winners.column("html").to_pylist()
+        if self.extract_versions:
+            epochs = winners.column("epoch").to_pylist()
+            extracted = [
+                extractor_for_epoch(self.extract_versions, int(e))(h) for h, e in zip(htmls, epochs)
+            ]
+        else:
+            extracted = [extract_text_bytes(h) for h in htmls]
+        # the quarantine rule and extraction share one validity rule, so
+        # this filter is defensive
+        ok = winners.filter(pa.array([err is None for _t, err in extracted], pa.bool_()))
+        texts = pa.array([t for t, err in extracted if err is None], pa.string())
+        if "text" in ok.column_names:
+            ok = ok.drop_columns(["text"])
+        ok = ok.append_column("text", texts)
+        ok = ok.append_column("deleted", pc.equal(ok.column("op"), "delete"))
+        adds = write_bucket_files(project(ok, self), self.table_path, self.stage_rel, self)
+        counts = _sum_counts(tbl.column("__counts"))
+        return pa.table(
+            {
+                "add": pa.array(adds + [None], _ADD),
+                "counts": pa.array([None] * len(adds) + [counts], _COUNTS),
+            }
+        )
+
+
+def _in_task(stage):
+    """A ``mapInArrow`` function running ``stage(table, partition id)`` over
+    its task's whole partition; an empty partition yields nothing."""
+
+    def run(batches):
+        batches = list(batches)
+        if batches:
+            out = stage(pa.Table.from_batches(batches), TaskContext.get().partitionId())
+            yield from out.to_batches()
+
+    return run
+
+
+def project_df(df: DataFrame, st) -> DataFrame:
+    """``df`` projected to the current table schema by field id, the Spark
+    twin of ``arrow_apply.project``: each column from its resolved source
+    (cast to the field's type), or NULL."""
+    return df.select(
+        *[
+            (F.col(src) if src is not None else F.lit(None))
+            .cast(_parse_lake_type(f.type))
+            .alias(f.name)
+            for f, src in resolve_sources(st, df.columns)
+        ]
+    )
 
 
 def _page_names(st) -> dict[str, str]:
@@ -266,31 +378,17 @@ class CdcPipeline:
     def apply_batch(self, events: DataFrame, batch_id: int) -> dict:
         """Apply one micro-batch of change events. Idempotent on batch_id.
 
-        Two execution modes, chosen by the size of the batch (a property of
-        the input, never an option): the optimizer's size estimate of the
-        batch's plan — computed from file metadata while planning, so the
-        choice runs no Spark job — below ``_SMALL_BATCH_BYTES`` means
-        ``"driver"``, anything else (or no estimate) means ``"spark"``.
-        Both give the same table rows, dead-letter rows and commit summary;
-        the summary and the returned stats record which one ran as
-        ``exec``. Both write the batch's dead-letter rows BEFORE the
-        commit, so a crash after the commit cannot lose them, and the
-        commit's ``apply_ms`` includes that write.
-
-        - **spark**: the whole batch streams through ONE job — validity
-          check (Arrow decode pass) → latest-wins aggregate → extraction of
-          winners → bucketed file write — with batch statistics (event
-          count, seq range, quarantine count, and the quarantined events'
-          seqs and html lengths) collected *during* that job via
-          ``Observation`` metrics. No ``persist()`` of raw html, no second
-          stats pass. Between that job and the commit, the quarantined
-          rows are fetched by seq in bounded slices and written on the
-          driver.
-        - **driver**: one Arrow pass — ``toArrow()``, the quarantine rule,
-          latest-wins, extraction of winners, projection to the current
-          schema and one pyarrow file per touched bucket — with no Spark
-          job past the read of the batch.
-        """
+        The two stages of the apply core (:class:`_Apply`) run on the driver
+        over one ``toArrow()`` table when the batch is small, and in
+        ``mapInArrow`` tasks with one exchange by bucket between them when
+        it is large (see :meth:`_exec_mode`: a property of the input, never
+        an option). Then the driver renames the batch's dead-letter
+        directory to ``quarantine/batch=N`` and commits the written files in
+        one delta commit, so a crash after the commit cannot lose a dead
+        letter. The counts come from the stages' own output and the
+        dead-letter files, so a retried task cannot count twice. Both modes
+        give the same rows, dead letters and commit summary; the summary
+        and the returned stats record the mode as ``exec``."""
         events = self._normalize(events)
         st = self.table.state()
         if batch_id in st.epochs:
@@ -302,11 +400,43 @@ class CdcPipeline:
                 self.post_commit(events, batch_id, stats)
             return stats
         t0 = time.time()
-        exec_mode = self._exec_mode(events, st)
-        if exec_mode == "driver":
-            res, got = self._apply_on_driver(events, batch_id, st, t0)
-        else:
-            res, got = self._apply_with_spark(events, batch_id, st, t0)
+        exec_mode = self._exec_mode(events)
+        core = _Apply(
+            batch_id=batch_id,
+            dead_dir=os.path.join(self.quarantine_dir, f".tmp-batch={batch_id}"),
+            table_path=self.table.path,
+            stage_rel=os.path.join("data", uuid.uuid4().hex),
+            schema=st.schema,
+            schemas=st.schemas,
+            key_col=st.key_col,
+            ts_col=st.ts_col,
+            num_buckets=st.num_buckets,
+            extract_versions=tuple(self.extract_versions) if self.extract_versions else None,
+        )
+        # a crash before an earlier attempt's rename left this directory
+        shutil.rmtree(core.dead_dir, ignore_errors=True)
+        try:
+            if exec_mode == "driver":
+                result = core.write(core.reduce(events.toArrow(), 0))
+            else:
+                result = self._task_plan(events, core).toArrow()
+        except BaseException:
+            shutil.rmtree(core.dead_dir, ignore_errors=True)
+            raise
+        got = _sum_counts(result.column("counts"))
+        got["nq"] = self._publish_dead_letters(core.dead_dir, batch_id)
+        res = self.table.append_delta(
+            result.column("add").drop_null().to_pylist(),
+            epoch=batch_id,
+            summary_fn=lambda: {
+                "watermark": got["max_seq"],
+                "n_events": got["n"],
+                "n_quarantined": got["nq"],
+                "min_seq": got["min_seq"],
+                "apply_ms": int((time.time() - t0) * 1000),
+            },
+            extra_summary={"key_norm": self._key_norm, "exec": exec_mode},
+        )
 
         # an unknown count (a checkpoint older than the count) compacts now
         if st.delta_commits is None or st.delta_commits + 1 >= self.compact_every:
@@ -316,10 +446,10 @@ class CdcPipeline:
             "batch_id": batch_id,
             "skipped": bool(res.get("skipped")),
             "exec": exec_mode,
-            "n_events": int(got["n"] or 0),
-            "n_quarantined": int(got["nq"] or 0),
-            "min_seq": int(got["min_seq"]) if got["min_seq"] is not None else None,
-            "max_seq": int(got["max_seq"]) if got["max_seq"] is not None else None,
+            "n_events": got["n"],
+            "n_quarantined": got["nq"],
+            "min_seq": got["min_seq"],
+            "max_seq": got["max_seq"],
             "table_version": res.get("version"),
             "duration_ms": int((time.time() - t0) * 1000),
         }
@@ -327,207 +457,53 @@ class CdcPipeline:
             self.post_commit(events, batch_id, stats)
         return stats
 
-    def _exec_mode(self, events: DataFrame, st) -> str:
+    def _exec_mode(self, events: DataFrame) -> str:
         """``"driver"`` when the batch's optimizer size estimate is below
-        ``_SMALL_BATCH_BYTES`` and every table column has an Arrow type;
-        otherwise ``"spark"``. Reading the estimate plans the query but runs
-        no job (file sources size themselves from file metadata). A plan
-        without an estimate reports ``Long.MaxValue`` — e.g. a
-        ``createDataFrame`` of Python rows — and a filter without CBO
-        reports its whole input, so both take the Spark path."""
+        ``_SMALL_BATCH_BYTES``, otherwise ``"spark"``. Reading the estimate
+        plans the query but runs no job (file sources size themselves from
+        file metadata). A plan without an estimate reports
+        ``Long.MaxValue`` — e.g. a ``createDataFrame`` of Python rows — and
+        a filter without CBO reports its whole input, so both run in
+        Spark."""
         try:
             size = int(str(events._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-            arrow_schema(st.schema)
-        except Exception:  # noqa: BLE001 — no estimate means the Spark path
+        except Exception:  # noqa: BLE001 — no estimate means the Spark mode
             return "spark"
         return "driver" if size < _SMALL_BATCH_BYTES else "spark"
 
-    def _apply_on_driver(self, events: DataFrame, batch_id: int, st, t0: float) -> tuple[dict, dict]:
-        """The small-batch apply: one Arrow pass on the driver with the
-        engine's own pure rules — ``check_quarantine_bytes`` on every event,
-        latest-wins on (warc_ts, seq) over the valid ones, the extractor
-        (version-dispatched by epoch) on winners only, projection to the
-        current schema by field id, then a delta commit of one pyarrow file
-        per touched bucket. Returns (append result, batch counts)."""
-        tbl = events.toArrow()
-        errs = _quarantine_errs(tbl)
-        bad = pc.is_valid(errs)
-        got = {
-            "n": tbl.num_rows,
-            "max_seq": pc.max(tbl.column("seq")).as_py(),
-            "min_seq": pc.min(tbl.column("seq")).as_py(),
-            "nq": int(pc.sum(bad).as_py() or 0),
-        }
-        if got["nq"]:
-            self._write_quarantine_arrow([(tbl.filter(bad), errs.filter(bad))], batch_id)
-        winners = latest_wins(tbl.filter(pc.invert(bad)), "url", ["warc_ts", "seq"])
-        htmls = winners.column("html").to_pylist()
-        if self.extract_versions:
-            bounds = tuple(self.extract_versions)
-            epochs = winners.column("epoch").to_pylist()
-            extracted = [extractor_for_epoch(bounds, int(e))(h) for h, e in zip(htmls, epochs)]
-        else:
-            extracted = [extract_text_bytes(h) for h in htmls]
-        # the quarantine pre-check and extraction share one validity rule,
-        # so this filter is defensive, as on the Spark path
-        ok = winners.filter(pa.array([err is None for _t, err in extracted], pa.bool_()))
-        texts = pa.array([t for t, err in extracted if err is None], pa.string())
-        if "text" in ok.column_names:
-            ok = ok.drop_columns(["text"])
-        ok = ok.append_column("text", texts)
-        ok = ok.append_column("deleted", pc.equal(ok.column("op"), "delete"))
-        res = self.table.append_delta(
-            project(ok, st), epoch=batch_id, summary_fn=lambda: _commit_counts(got, t0),
-            extra_summary={"key_norm": self._key_norm, "exec": "driver"},
+    def _task_plan(self, events: DataFrame, core: _Apply) -> DataFrame:
+        """The Spark mode's plan: ``core.reduce`` per input partition, one
+        exchange on the table's bucket expression into
+        ``spark.sql.shuffle.partitions`` partitions, ``core.write`` per
+        partition. Its rows are the tasks' add-entries and counts."""
+        reduced = events.mapInArrow(
+            _in_task(core.reduce),
+            T.StructType(
+                [T.StructField(f.name, f.dataType, True) for f in events.schema.fields]
+                + [T.StructField("__counts", from_arrow_type(_COUNTS))]
+            ),
         )
-        return res, got
-
-    def _apply_with_spark(self, events: DataFrame, batch_id: int, st, t0: float) -> tuple[dict, dict]:
-        """The Spark plan (see :meth:`apply_batch`). Returns (append result,
-        batch counts)."""
-        from pyspark.sql import Observation
-
-        # Validity check, JVM-first with a masked python residue: the ratio
-        # rule counts U+FFFD in the DECODED string, so it can fire on
-        # invalid-UTF-8 payloads (~0.2% of events) AND on valid UTF-8 whose
-        # text literally contains '�' — the fast path must exclude both or a
-        # literal-U+FFFD page is silently dropped instead of quarantined
-        # (round-3 "What's wrong" #2). A byte-level JVM `contains` catches
-        # the literal case at column speed (see _UFFFD_BYTES). The UDF input
-        # is MASKED to NULL for fast rows, so only the residue's bytes ever
-        # cross the Arrow channel (the channel, not python CPU, is the
-        # scaling bottleneck), in ONE scan — no two-branch union, no double
-        # read. Semantics are identical to running check_quarantine_udf on
-        # every row (python rule stays the byte-level arbiter; tested).
-        is_ok_fast = _is_ok_fast_expr()
-        masked = F.when(~is_ok_fast, F.col("html"))  # NULL for fast rows
-
-        obs = Observation(f"cdc-batch-{batch_id}")
-        # r6 A/B note: a residue-branch form (python arbiter on a second
-        # events.filter(~is_ok_fast) scan, joined back as a broadcast
-        # bad-list) was measured SLOWER (3.3 s vs 2.6 s per 250k-event
-        # plan): the duplicated utf8-validity scan over the full batch costs
-        # more than this masked column's mostly-NULL Arrow channel. The
-        # masked single-scan form stands.
-        q_err = check_quarantine_udf()(masked)
-        ev = events.withColumn("__q_err", q_err).observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.max("seq").alias("max_seq"),
-            F.min("seq").alias("min_seq"),
-            F.count("__q_err").alias("nq"),
-            F.collect_list(
-                F.when(F.col("__q_err").isNotNull(), F.struct("seq", F.length("html")))
-            ).alias("bad"),
-        )
-        valid = ev.filter(F.col("__q_err").isNull()).drop("__q_err")
-        n_buckets = st.num_buckets
-        # Winner selection + bucket placement: a dedup exchange on url
-        # (map-side combined, so a hot url ships at most one row per map
-        # task), then a second exchange placing winners by bucket.
-        # Extraction runs AFTER placement, so shuffled bytes are raw html,
-        # never html+text.
-        winners = self._resolve_latest(valid)
-        placed = winners.withColumn(
-            "__b", self.table._bucket_expr("url", n_buckets)
-        ).repartition(max(n_buckets, 1), F.col("__b")).drop("__b")
-        if self.extract_versions:
-            extracted = with_extracted_text_versioned(
-                placed, self.extract_versions, epoch_col="epoch", html_col="html", out_text="text"
-            )
-        else:
-            extracted = with_extracted_text(placed, html_col="html", out_text="text")
-        # the cheap pre-check and the full extraction share one validity
-        # rule (tested byte-identical) — extraction runs exactly once, on
-        # dedup winners only; the filter below is defensive.
-        ok = extracted.filter(F.col("__extract_err").isNull()).withColumn(
-            "deleted", F.col("op") == "delete"
-        )
-        # dynamic projection to the CURRENT table schema by field id (see
-        # arrow_apply.resolve_sources): a column missing from the payload
-        # under every name of its field id is NULL
-        batch = ok.select(
-            *[
-                (F.col(src) if src is not None else F.lit(None))
-                .cast(_parse_lake_type(f.type))
-                .alias(f.name)
-                for f, src in resolve_sources(st, ok.columns)
-            ]
+        placed = reduced.repartition(self.table._bucket_expr("url", core.num_buckets))
+        result = pa.schema([("add", _ADD), ("counts", _COUNTS)])
+        return placed.mapInArrow(
+            _in_task(lambda tbl, _part: core.write(tbl)), from_arrow_schema(result)
         )
 
-        def _merged_obs() -> dict:
-            try:
-                got = obs.get
-            except Exception:
-                # An ALL-EMPTY micro-batch (a gap in the epoch sequence) can
-                # collapse to a plan whose CollectMetrics node never runs
-                # (AQE empty-relation propagation), leaving the observation
-                # unfilled — Observation.get then raises a JVM assertion.
-                # Confirm the batch really was empty before degrading to
-                # zero counts; anything else must surface.
-                if not ev.isEmpty():
-                    raise
-                return {"n": 0, "max_seq": None, "min_seq": None, "nq": 0, "bad": []}
-            return {
-                "n": int(got["n"] or 0),
-                "max_seq": got["max_seq"],
-                "min_seq": got["min_seq"],
-                "nq": int(got["nq"] or 0),
-                "bad": got["bad"],
-            }
-
-        def _summary() -> dict:
-            got = _merged_obs()
-            if got["nq"]:
-                self._write_quarantine_arrow(self._fetch_quarantined(events, got["bad"]), batch_id)
-            return _commit_counts(got, t0)
-
-        # the summary runs after the sink's write job (metrics available),
-        # before the atomic commit — dead-letter rows, watermark and counts
-        # land with the commit, like the reference's single-transaction CAS.
-        res = self.table.append_delta(
-            batch, epoch=batch_id, summary_fn=_summary,
-            pre_partitioned=True,
-            extra_summary={"key_norm": self._key_norm, "exec": "spark"},
-        )
-        return res, _merged_obs()
-
-    def _fetch_quarantined(self, events: DataFrame, bad: list):
-        """The batch's dead-letter rows with their errors, one slice of the
-        observed (seq, html length) pairs at a time (see ``_fetch_slices``),
-        so the driver never holds more than one slice of raw html. Each
-        slice's rows are read back by seq and re-checked with the same rule
-        on the driver."""
-        for seqs in _fetch_slices([(r[0], r[1]) for r in bad]):
-            rows = events.filter(F.col("seq").isin(seqs)).select(*_QUARANTINE_COLUMNS).toArrow()
-            errs = _quarantine_errs(rows)
-            keep = pc.is_valid(errs)
-            yield rows.filter(keep), errs.filter(keep)
-
-    def _write_quarantine_arrow(self, slices, batch_id: int) -> None:
-        """Dead-letter store (T8): each (event rows, errors) slice becomes one
-        parquet file of the raw payload plus ``err`` and ``batch_id`` (typed
-        as Spark types the literal). The batch's directory is replaced whole
-        — its files are written to a hidden sibling, then renamed in — so a
-        replay rewrites it idempotently (analog of the atomic quarantine
-        upsert, `parser/dex/repo/repository.go:302-330`)."""
-        id_type = pa.int32() if -(2**31) <= batch_id < 2**31 else pa.int64()
+    def _publish_dead_letters(self, dead_dir: str, batch_id: int) -> int:
+        """Rename the batch's hidden dead-letter directory to
+        ``quarantine/batch=N``, replacing that directory whole, so a replay
+        rewrites it idempotently (analog of the atomic quarantine upsert,
+        `parser/dex/repo/repository.go:302-330`). Returns its row count,
+        read from the part footers."""
+        parts = glob.glob(os.path.join(dead_dir, "part-*.parquet"))
+        if not parts:
+            shutil.rmtree(dead_dir, ignore_errors=True)
+            return 0
+        n = sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
         path = os.path.join(self.quarantine_dir, f"batch={batch_id}")
-        tmp = os.path.join(self.quarantine_dir, f".tmp-{uuid.uuid4().hex}")
-        os.makedirs(tmp)
-        try:
-            for bad, errs in slices:
-                out = (
-                    bad.select(_QUARANTINE_COLUMNS)
-                    .append_column("err", errs)
-                    .append_column("batch_id", pa.array([batch_id] * bad.num_rows, id_type))
-                )
-                pq.write_table(out, os.path.join(tmp, f"part-{uuid.uuid4().hex}.parquet"))
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
         shutil.rmtree(path, ignore_errors=True)
-        os.rename(tmp, path)
+        os.rename(dead_dir, path)
+        return n
 
     def lineage(self) -> list[dict]:
         """T12 lineage: one row per retained ``delta`` commit that carries
@@ -553,7 +529,7 @@ class CdcPipeline:
         st = self.table.state()
         names = st.schema.names()
         types = {f.name: f.type for f in st.schema.fields}
-        for at_epoch, change, spec in sorted(evolutions):
+        for at_epoch, change, spec in sorted(evolutions, key=lambda e: e[:2]):
             if at_epoch > upto_epoch:
                 break
             applied = (
@@ -828,10 +804,9 @@ class CdcPipeline:
         staged = self.spark.read.parquet(staging)
 
         ok = staged.filter(F.col("__extract_err").isNull())
-        winners = latest_wins_agg(ok, key="url", order_cols=["warc_ts", "seq"])
-        batch = winners.select(
-            "url", "warc_ts", "html", "text", "lang", "seq",
-            (F.col("op") == "delete").alias("deleted"),
+        winners = latest_wins_agg(ok, key="url", order_cols=_ORDER)
+        batch = project_df(
+            winners.withColumn("deleted", F.col("op") == "delete"), self.table.state()
         )
         # retry epochs live in their own id namespace (below _RETRY_EPOCH_BASE)
         # so they can never collide with a replay/streaming batch epoch; a

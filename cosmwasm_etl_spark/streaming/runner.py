@@ -100,8 +100,7 @@ def _make_handler(
         if schema_evolutions:
             # epochs actually present (bounded by epochs-per-trigger — one
             # tiny job): slices are built only over NON-EMPTY epoch ranges,
-            # both because an empty apply is wasted work and because an
-            # all-empty slice breaks Observation-metric collection
+            # because an empty apply is wasted work
             present = sorted(
                 int(r[0]) for r in batch_df.select("epoch").distinct().collect()
             )

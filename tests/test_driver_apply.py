@@ -1,5 +1,5 @@
-"""The two execution modes of ``CdcPipeline.apply_batch``: the driver-side
-Arrow apply for small batches and the Spark plan for large ones.
+"""The two execution modes of ``CdcPipeline.apply_batch``: the apply core
+runs on the driver for small batches and in Spark tasks for large ones.
 
 The gate is the optimizer's size estimate of the batch's plan, compared with
 ``plans.pipeline._SMALL_BATCH_BYTES``. The differential tests force it each
@@ -10,7 +10,6 @@ from __future__ import annotations
 import datetime as dt
 import os
 
-import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -170,6 +169,45 @@ def test_driver_and_spark_apply_agree_evolved_schema(spark, tmp_path, monkeypatc
     assert dict(pipes["driver"].table.read().dtypes)["fetch_status"] == "bigint"
 
 
+def test_driver_and_spark_apply_agree_hot_url(spark, tmp_path, monkeypatch):
+    """One url carries at least 90% of each batch's events, spread over
+    several input partitions, so the Spark mode's first stage reduces it
+    in more than one task."""
+    events = synthetic_events(
+        spark, 800, n_urls=40, events_per_epoch=400, hot_traffic_fraction=0.95,
+        quarantine_per_mille=20,
+    )
+    for epoch in (0, 1):
+        batch = events.filter(F.col("epoch") == epoch)
+        top = batch.groupBy("url").count().orderBy(F.desc("count")).first()
+        assert top["count"] >= 0.9 * batch.count()
+        hot = batch.filter(F.col("url") == top["url"])
+        assert hot.select(F.spark_partition_id()).distinct().count() >= 2
+    pipes = replay_both(spark, tmp_path, monkeypatch, events)
+    assert_same(pipes, events)
+
+
+def test_driver_and_spark_apply_agree_nested_columns(spark, tmp_path, monkeypatch):
+    """Added array, map and struct columns apply in both modes."""
+    evolutions = [
+        (1, "add_column", {"name": "tags", "type": "array<string>"}),
+        (1, "add_column", {"name": "headers", "type": "map<string,int>"}),
+        (1, "add_column", {"name": "fetch", "type": "struct<status:int,ms:bigint>"}),
+    ]
+    rows = [
+        ev(i, i // 3, "insert", f"u/{i % 4}", i, tags=[f"t{i}", None], headers={"h": i},
+           fetch=(200 + i, i * 10))
+        for i in range(9)
+    ]
+    schema = EVENT_SCHEMA + ", tags array<string>, headers map<string,int>, "
+    schema += "fetch struct<status:int,ms:bigint>"
+    events = spark.createDataFrame(rows, schema)
+    pipes = replay_both(spark, tmp_path, monkeypatch, events, evolutions=evolutions)
+    assert_same(pipes, events)
+    got = {r.url: (r.tags, r.headers, r.fetch.status) for r in pipes["driver"].pages().collect()}
+    assert got["u/0"] == (["t8", None], {"h": 8}, 208)
+
+
 def test_latest_wins_and_bucket_routing_match_spark(spark):
     """The Arrow latest-wins and the Python bucket function agree with the
     Spark operators they stand in for."""
@@ -220,31 +258,21 @@ def test_dead_letters_survive_a_crash_after_commit(spark, tmp_path, monkeypatch,
     assert {r.seq for r in pipe2.read_quarantine().collect()} == want
 
 
-def test_dead_letter_fetch_slices(monkeypatch):
-    """Slices go in seq order, hold at most 1,024 seqs and
-    ``_SMALL_BATCH_BYTES`` of html, and never come out empty: a page larger
-    than the limit is a slice of its own."""
-    assert [len(s) for s in pipeline_mod._fetch_slices([(i, 1) for i in range(2_500)])] == [
-        1024, 1024, 452
-    ]
-    monkeypatch.setattr(pipeline_mod, "_SMALL_BATCH_BYTES", 100)
-    bad = [(3, 60), (1, 60), (2, 200), (4, 30), (5, None)]
-    assert pipeline_mod._fetch_slices(bad) == [[1], [2], [3, 4, 5]]
-
-
-def test_failed_dead_letter_write_leaves_no_files(spark, tmp_path):
-    """A fetch that fails mid-write removes its hidden directory, and the
-    batch's directory is never renamed in."""
+def test_failed_dead_letter_write_leaves_no_files(spark, tmp_path, monkeypatch):
+    """An apply that fails after its first stage wrote dead letters removes
+    the batch's hidden directory, and the batch's directory is never
+    renamed in."""
+    monkeypatch.setattr(pipeline_mod, "_SMALL_BATCH_BYTES", FORCE["driver"])
     table = create_pages_table(spark, str(tmp_path / "pages"), num_buckets=4)
     pipe = CdcPipeline(spark, table, str(tmp_path / "work"))
 
-    def slices():
-        rows = base_events(spark).toArrow().slice(4, 1)
-        yield rows, pa.array(["bad"], pa.string())
-        raise RuntimeError("fetch failed")
+    def fail(self, tbl):
+        assert os.listdir(self.dead_dir)  # the first stage's dead letters
+        raise RuntimeError("write failed")
 
-    with pytest.raises(RuntimeError, match="fetch failed"):
-        pipe._write_quarantine_arrow(slices(), 0)
+    monkeypatch.setattr(pipeline_mod._Apply, "write", fail)
+    with pytest.raises(RuntimeError, match="write failed"):
+        pipe.apply_batch(base_events(spark).filter(F.col("epoch") == 0), 0)
     assert os.listdir(pipe.quarantine_dir) == []
 
 
@@ -258,11 +286,11 @@ def test_exec_mode_gate_runs_no_job(spark, tmp_path, monkeypatch):
     decisions = []
     exec_mode = CdcPipeline._exec_mode
 
-    def watched(self, events, st):
+    def watched(self, events):
         group = f"exec-mode-gate-{len(decisions)}"
         sc.setJobGroup(group, "exec mode gate")
         try:
-            mode = exec_mode(self, events, st)
+            mode = exec_mode(self, events)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         decisions.append((mode, list(sc.statusTracker().getJobIdsForGroup(group))))
@@ -285,9 +313,9 @@ def test_exec_mode_gate_runs_no_job(spark, tmp_path, monkeypatch):
     log = read_event_log(spark, str(tmp_path / "big"))
     size = int(str(log._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
     assert size > pipeline_mod._SMALL_BATCH_BYTES
-    assert pipe._exec_mode(log.filter(F.col("epoch") < 1), table.state()) == "spark"
+    assert pipe._exec_mode(log.filter(F.col("epoch") < 1)) == "spark"
 
     # Python rows have no size estimate
     rows = spark.createDataFrame([ev(0, 0, "insert", "u/x", 0)], EVENT_SCHEMA)
-    assert pipe._exec_mode(rows, table.state()) == "spark"
+    assert pipe._exec_mode(rows) == "spark"
     assert decisions[1:] == [("spark", []), ("spark", [])]

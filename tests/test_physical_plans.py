@@ -92,15 +92,15 @@ def test_simhash_plan_is_pure_jvm(spark, sf_dir):
     assert "partial_sum" in plan.lower()  # map-side combine of the bit votes
 
 
-def test_apply_write_plan_has_two_exchanges_and_one_scan(spark, tmp_path, monkeypatch):
-    """The frame apply_batch hands the sink: exactly two hash exchanges —
-    the url dedup (map-side combined) and the bucket placement — no
-    broadcast join, and ONE scan of the batch's log slice. The slice is
-    small enough for the driver path, so the size gate is pinned to the
-    Spark plan, which is this test's subject."""
+def test_apply_plan_has_one_exchange_and_one_scan(spark, tmp_path, monkeypatch):
+    """The Spark mode's apply plan: ONE scan of the batch's log slice, the
+    two Arrow stages, and exactly one hash exchange between them, by
+    bucket into the shuffle parallelism — the same partition count at 8
+    and 64 buckets. No Python UDF evaluation and no broadcast join. The
+    slice is small enough for the driver mode, so the size gate is pinned
+    to the Spark mode, which is this test's subject."""
     import re
 
-    from cosmwasm_etl_spark.lakehouse import LakeTable
     from cosmwasm_etl_spark.plans import pipeline as pipeline_mod
     from cosmwasm_etl_spark.plans.pipeline import CdcPipeline, create_pages_table
 
@@ -110,23 +110,32 @@ def test_apply_write_plan_has_two_exchanges_and_one_scan(spark, tmp_path, monkey
     ev = synthetic_events(spark, 2_000, n_urls=200, events_per_epoch=500)
     write_event_log(ev, str(tmp_path / "ev"), range_partitions=2)
     events = read_event_log(spark, str(tmp_path / "ev"))
-    table = create_pages_table(spark, str(tmp_path / "pages"), num_buckets=8)
-    pipe = CdcPipeline(spark, table, str(tmp_path / "work"))
     seen = []
-    append_delta = LakeTable.append_delta
+    task_plan = CdcPipeline._task_plan
 
-    def capture(self, batch, *a, **kw):
-        seen.append(batch)
-        return append_delta(self, batch, *a, **kw)
+    def capture(self, *a):
+        df = task_plan(self, *a)
+        seen.append(_plan(df))  # before it runs: AQE then shows one plan
+        return df
 
-    monkeypatch.setattr(LakeTable, "append_delta", capture)
-    pipe.apply_batch(events.filter(F.col("epoch") < 2), 0)
-    assert len(seen) == 1
-    plan = _plan(seen[0])
-    exchanges = re.findall(r"Exchange hashpartitioning\((\w+)#", plan)
-    assert sorted(exchanges) == ["__b", "url"], plan
-    assert "BroadcastHashJoin" not in plan
-    assert plan.count("FileScan parquet") == 1, plan
+    monkeypatch.setattr(CdcPipeline, "_task_plan", capture)
+    counts = []
+    for n_buckets in (8, 64):
+        table = create_pages_table(
+            spark, str(tmp_path / f"pages{n_buckets}"), num_buckets=n_buckets
+        )
+        pipe = CdcPipeline(spark, table, str(tmp_path / f"work{n_buckets}"))
+        assert pipe.apply_batch(events.filter(F.col("epoch") < 2), 0)["exec"] == "spark"
+        plan = seen[-1]
+        exchanges = re.findall(r"Exchange hashpartitioning\((.*), (\d+)\), REPARTITION", plan)
+        assert len(exchanges) == 1 and plan.count("Exchange") == 1, plan
+        assert "xxhash64(url#" in exchanges[0][0], plan
+        counts.append(int(exchanges[0][1]))
+        assert plan.count("MapInArrow") == 2, plan
+        assert plan.count("FileScan parquet") == 1, plan
+        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
+        assert "BroadcastHashJoin" not in plan
+    assert counts == [int(spark.conf.get("spark.sql.shuffle.partitions"))] * 2
 
 
 def test_bucket_mode_apply_has_single_exchange(spark, tmp_path):

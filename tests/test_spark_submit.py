@@ -43,7 +43,12 @@ def test_spark_submit_pyfiles_replay(spark, tmp_path):
 
     events_dir = str(tmp_path / "events")
     n_events, epb = 3_000, 300
-    events = synthetic_events(spark, n_events, n_urls=200, events_per_epoch=epb)
+    # pages of ~500 words make the log larger than the apply's size gate,
+    # so replay slices run in Spark tasks: engine code from the zip runs
+    # inside the executors' Python workers
+    events = synthetic_events(
+        spark, n_events, n_urls=200, events_per_epoch=epb, body_words=500
+    )
     write_event_log(events, events_dir, range_partitions=4)
 
     zip_path = _build_zip(str(tmp_path / "dist" / "cosmwasm_etl_spark.zip"))
@@ -99,6 +104,8 @@ def test_spark_submit_pyfiles_replay(spark, tmp_path):
 
     table = LakeTable.load(spark, table_dir)
     assert table.read().count() > 0
+    deltas = [h["summary"] for h in table.history() if h["operation"] == "delta"]
+    assert deltas and {s["exec"] for s in deltas} == {"spark"}
     pipe = CdcPipeline(spark, table, work_dir)
     log = spark.read.parquet(events_dir)
     assert pipe.audit(log).count() == 0
